@@ -19,6 +19,11 @@ object Verify {
         .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // every registry window without PARTITION BY warns on each execution;
+    // the wall would drown the `[verify] … failed` lines
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec",
+      org.apache.logging.log4j.Level.ERROR)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

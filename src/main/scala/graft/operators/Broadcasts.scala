@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions.broadcast
 import org.apache.spark.sql.graftbridge.PlanBridge
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.SizeEstimator
+import scala.util.DynamicVariable
 
 /** Runtime-stats-gated broadcast: the decision a cost-based optimizer
   * would make, taken on MEASURED size instead of compounded estimates.
@@ -88,9 +89,19 @@ object Broadcasts {
     * JVM's max heap (local posture — driver IS the executor).
     */
   def defaultMaxBytes(spark: SparkSession): Long =
-    pinBudget(
+    budgetOverride.value.getOrElse(pinBudget(
       spark.sparkContext.getConf.getOption("spark.executor.memory"),
-      Runtime.getRuntime.maxMemory)
+      Runtime.getRuntime.maxMemory))
+
+  private val budgetOverride = new DynamicVariable[Option[Long]](None)
+
+  /** Run `body` with the session pin budget replaced by `bytes` on this
+    * thread — `withPinBudget(0L)` closes every default gate, so specs can
+    * drive the gated queries down their past-the-budget branch. A test
+    * substitution point, not a user option.
+    */
+  private[graft] def withPinBudget[T](bytes: Long)(body: => T): T =
+    budgetOverride.withValue(Some(bytes))(body)
 
   /** max(256 MB, heap/16) over the configured executor heap when given,
     * else the fallback heap — split out pure so the conf-driven gate is

@@ -18,18 +18,19 @@ import graft.expressions.{LongLookupTable, LongMapLookup, StringPoolLookup}
   * so a multi-attribute dimension no longer needs per-query packing
   * tricks to qualify.
   *
-  * Why it exists (measured, 1000× replica, ProfileQ5Parts2): a
-  * broadcast hash join REBUILDS its relation on the driver for every
-  * execution — collect the side, build the UnsafeRow hash relation
-  * single-threaded, re-broadcast — which for q5's 4.5 M-row reduced
-  * (orders ⋈ customer) side is 2.12 s of q5's 5.08 s warm time, paid
-  * per run while DuckDB rebuilds its table in parallel in a fraction of
-  * that. This operator builds a compact open-addressing long→long table
-  * ONCE per (session, side plan), broadcasts it once, and probes it
-  * with [[LongMapLookup]] inside whole-stage codegen — warm executions
-  * pay only the probes. That is also the standing-pipeline posture the
-  * bench's warm/cold split already reports: the COLD pass resets this
-  * cache (Bench does) and honestly re-pays the build.
+  * Why it exists (measured at the 1000× replica): a broadcast hash
+  * join REBUILDS its relation on the driver for every execution —
+  * collect the side, build the UnsafeRow hash relation
+  * single-threaded, re-broadcast — and for a reduced star-schema side
+  * of millions of rows that rebuild dominates the warm run (q3b
+  * 8.12 → 3.30 s, LOOKUP_ARITY_MEASURE.json; q10 19.5 → 2.83 s,
+  * LOOKUP_STRING_MEASURE.json). This operator builds a compact
+  * open-addressing long→long table ONCE per (session, side plan),
+  * broadcasts it once, and probes it with [[LongMapLookup]] inside
+  * whole-stage codegen — warm executions pay only the probes. That is
+  * also the standing-pipeline posture the bench's warm/cold split
+  * already reports: the COLD pass resets this cache (Bench does) and
+  * honestly re-pays the build.
   *
   * Semantics: exactly the inner equi-join `fact ⋈ side ON factKey =
   * sideKey` projecting `side.payload` — REQUIRING the side's keys
@@ -41,10 +42,12 @@ import graft.expressions.{LongLookupTable, LongMapLookup, StringPoolLookup}
   *
   * Scale posture: the table is ~2.3× key bytes (load factor 0.7) — a
   * 4.5 M-key side is ~100 MB pinned once per executor, the same budget
-  * class [[Broadcasts]] gates on; callers gate with
-  * [[Broadcasts.gatedStats]] and fall back to the shuffle join (plus
-  * [[RuntimeFilters.shuffleGuard]]) past the pin budget, so nothing
-  * unboundedly-growing is ever collected to the driver.
+  * class [[Broadcasts]] gates on. Queries pass the
+  * [[Broadcasts.gatedStats]] side itself to the `Gated` overloads of
+  * [[inner]]/[[semi]], which take the probe only when the gate chose
+  * broadcast and otherwise shuffle-join the materialized side behind a
+  * Bloom guard ([[RuntimeFilters.keyFilter]]) — one query shape, and
+  * nothing unboundedly-growing is ever collected to the driver.
   *
   * Cache-lifetime contract (spec-gated, LookupJoinSpec):
   *
@@ -168,6 +171,51 @@ object LookupJoin {
     val bc = tableFor(side, sideKey, payloads)
     fact.filter(PlanBridge.column(LongMapLookup(
       PlanBridge.expression(factKey.cast(LongType)), bc.table, 0)).isNotNull)
+  }
+
+  /** [[inner]] against a gated side, choosing the physical join: when
+    * the gate chose broadcast, the cached-table probe above over
+    * `side.bare`; past the pin budget, a shuffle join against the
+    * already-materialized side with the fact Bloom-guarded by the side's
+    * keys, so the rows the join would drop never enter the fact
+    * shuffle (measured at the forced-shuffle 1000× arm: q3 39.6 → 8.5 s,
+    * BLOOMGUARD_MEASURE.json). Both branches return the same schema:
+    * integral payloads as long, strings as string; the `as` names must
+    * be new to `fact`. The shuffle branch does not check key
+    * uniqueness — it is the plain equi-join.
+    */
+  def inner(fact: DataFrame, factKey: Column, side: Broadcasts.Gated,
+      sideKey: String, payload: String, as: String): DataFrame =
+    inner(fact, factKey, side, sideKey, Seq(payload -> as))
+
+  def inner(fact: DataFrame, factKey: Column, side: Broadcasts.Gated,
+      sideKey: String, payloads: Seq[(String, String)]): DataFrame =
+    if (side.broadcasted) inner(fact, factKey, side.bare, sideKey, payloads)
+    else {
+      val types = side.bare.schema
+      shuffleJoin(fact, factKey, side, sideKey, "inner",
+        payloads.map { case (p, as) =>
+          (if (types(p).dataType == StringType) col(p)
+           else col(p).cast(LongType)).as(as)
+        })
+    }
+
+  /** [[semi]] against a gated side: the existence probe inside the pin
+    * budget, the Bloom-guarded shuffle left-semi join past it.
+    */
+  def semi(fact: DataFrame, factKey: Column, side: Broadcasts.Gated,
+      sideKey: String, payloads: Seq[String]): DataFrame =
+    if (side.broadcasted) semi(fact, factKey, side.bare, sideKey, payloads)
+    else shuffleJoin(fact, factKey, side, sideKey, "left_semi", Nil)
+
+  private def shuffleJoin(fact: DataFrame, factKey: Column,
+      side: Broadcasts.Gated, sideKey: String, how: String,
+      attach: Seq[Column]): DataFrame = {
+    val k = Cols.fresh("_lookup_key", fact.columns)
+    RuntimeFilters.keyFilter(fact, factKey, side.bare, sideKey, side.rows)
+      .join(side.bare.select(col(sideKey).cast(LongType).as(k) +: attach: _*),
+        factKey.cast(LongType) === col(k), how)
+      .drop(k)
   }
 
   private def tableFor(side: DataFrame, sideKey: String,

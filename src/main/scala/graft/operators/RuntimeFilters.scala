@@ -25,7 +25,9 @@ import org.apache.spark.sql.types.LongType
   * `InjectRuntimeFilter` fires only on shuffle joins for the same
   * arithmetic: against a SHUFFLE the sketch saves serializing,
   * writing, and re-reading the dropped rows — orders of magnitude more
-  * per row than any probe — so that is the path [[shuffleGuard]] arms.
+  * per row than any probe — so that is the only path that arms it:
+  * the `Gated` overloads of [[LookupJoin.inner]]/[[LookupJoin.semi]]
+  * plant it on the fact exactly when the gate refused the broadcast.
   *
   * Semantics: the filter can only pass EXTRA rows (false positives), and
   * the join it guards drops them — results are identical for the inner
@@ -50,20 +52,6 @@ import org.apache.spark.sql.types.LongType
   * serialization both ends, raw long keys both ends).
   */
 object RuntimeFilters {
-
-  /** Guard a fact side against a [[Broadcasts.gatedStats]] side: when
-    * the gate REFUSED the broadcast (the side outgrew the executor pin
-    * budget, so the join will shuffle both sides), pre-filter the fact
-    * with the side's key sketch — the rows the join would drop anyway
-    * never enter the fact shuffle. When the gate chose broadcast, the
-    * fact never shuffles and the bare relation probe is already cheaper
-    * than any sketch probe (measured — scaladoc above), so the fact
-    * passes through untouched.
-    */
-  def shuffleGuard(fact: DataFrame, factKey: String,
-      side: Broadcasts.Gated, sideKey: String): DataFrame =
-    if (side.broadcasted) fact
-    else keyFilter(fact, factKey, side.df, sideKey, side.rows)
 
   /** Past this many build-side keys the filter is skipped: at 1% fpp the
     * sketch would exceed ~75 MB — past the point where a per-row
@@ -121,7 +109,7 @@ object RuntimeFilters {
     * `sideRows` is the side's measured row count (the gated
     * materialization already has it — [[Broadcasts.gatedStats]]).
     */
-  def keyFilter(fact: DataFrame, factKey: String, side: DataFrame,
+  def keyFilter(fact: DataFrame, factKey: Column, side: DataFrame,
       sideKey: String, sideRows: Long, fpp: Double = Fpp): DataFrame = {
     if (sideRows <= 0 || sideRows > MaxKeys) return fact
     val key = (side.sparkSession, PlanBridge.analyzed(side).canonicalized,
@@ -135,7 +123,7 @@ object RuntimeFilters {
         if (race != null) race else { built.put(key, fresh); fresh }
       }
     }
-    fact.filter(mightContain(sketch, col(factKey)))
+    fact.filter(mightContain(sketch, factKey))
   }
 
   /** The codegen'd membership predicate over a serialized sketch. */

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.operators.{Broadcasts, Frame, LookupJoin, RuntimeFilters}
+import graft.operators.{Broadcasts, Frame, LookupJoin}
 import graft.sources.Tables
 
 /** Headline analytical queries (TPC-H-shaped) used for BENCH. Plans are
@@ -61,8 +61,9 @@ object Headline {
     // round-over-round numbers for this change, 1.95× → 1.03× of
     // DuckDB). The TIMESTAMP_NTZ order date rides the long-payload table
     // as unix micros — an exact round trip under the pinned UTC
-    // session — and is reconstructed at the group keys. Past the gate
-    // the join shuffles, Bloom-guarded.
+    // session — and is reconstructed at the group keys. Past the pin
+    // budget the same calls shuffle-join the materialized side,
+    // Bloom-guarded (LookupJoin's Gated overloads).
     Q("q3_shipping_priority",
       (s, dir) => {
         val c = t(s, dir, "customer")
@@ -82,40 +83,25 @@ object Headline {
           sum(cents(col("l_extendedprice") * (lit(1) - col("l_discount"))))
         val reconstructed =
           timestamp_micros(col("_od")).cast("timestamp_ntz")
-        if (ocG.broadcasted) {
-          // the order date is functionally dependent on the order key
-          // (the lookup side is unique-key), so the 600M-row aggregate
-          // groups on the BARE key — one probe per row in the filter,
-          // none in the group key, a key+sum-only exchange — and the
-          // date attaches AFTER the top-10, re-probing the same cached
-          // table on ten rows
-          LookupJoin.inner(l0, col("l_orderkey"), ocG.bare,
-              "o_orderkey", "_od", "_od").drop("_od")
-            .groupBy(col("l_orderkey").as("o_orderkey"))
-            .agg(revenue.as("revenue_c"))
-            .orderBy(desc_nulls_last("revenue_c"),
-              asc_nulls_first("o_orderkey"))
-            .limit(10)
-            .transform(top => LookupJoin.inner(top, col("o_orderkey"),
-              ocG.bare, "o_orderkey", "_od", "_od"))
-            .select(col("o_orderkey"),
-              reconstructed.as("o_orderdate"), col("revenue_c"))
-            .orderBy(desc_nulls_last("revenue_c"),
-              asc_nulls_first("o_orderkey"))
-        } else {
-          // past the gate the join shuffles — a Bloom of the oc keys
-          // keeps the droppable lineitem rows OUT of the fact shuffle;
-          // on the broadcast path the guard is a measured no
-          val lg = RuntimeFilters.shuffleGuard(l0, "l_orderkey", ocG,
-            "o_orderkey")
-          lg.join(ocG.df, ocG.df("o_orderkey") === lg("l_orderkey"))
-            .groupBy(col("o_orderkey"),
-              reconstructed.as("o_orderdate"))
-            .agg(revenue.as("revenue_c"))
-            .orderBy(desc_nulls_last("revenue_c"),
-              asc_nulls_first("o_orderkey"))
-            .limit(10)
-        }
+        // the order date is functionally dependent on the order key
+        // (the lookup side is unique-key), so the 600M-row aggregate
+        // groups on the BARE key — one probe per row in the filter,
+        // none in the group key, a key+sum-only exchange — and the
+        // date attaches AFTER the top-10, re-probing the same cached
+        // table on ten rows
+        LookupJoin.inner(l0, col("l_orderkey"), ocG,
+            "o_orderkey", "_od", "_od").drop("_od")
+          .groupBy(col("l_orderkey").as("o_orderkey"))
+          .agg(revenue.as("revenue_c"))
+          .orderBy(desc_nulls_last("revenue_c"),
+            asc_nulls_first("o_orderkey"))
+          .limit(10)
+          .transform(top => LookupJoin.inner(top, col("o_orderkey"),
+            ocG, "o_orderkey", "_od", "_od"))
+          .select(col("o_orderkey"),
+            reconstructed.as("o_orderdate"), col("revenue_c"))
+          .orderBy(desc_nulls_last("revenue_c"),
+            asc_nulls_first("o_orderkey"))
       },
       Some("""SELECT o_orderkey, o_orderdate,
              | CAST(SUM(CAST(ROUND(l_extendedprice*(1-l_discount)*100) AS BIGINT)) AS BIGINT) AS revenue_c
@@ -135,10 +121,10 @@ object Headline {
     // customer) side is still a unique-orderkey dimension, but its TWO
     // live attributes ride ONE slot-major table (one build, one
     // broadcast) instead of the per-query packing trick a single-payload
-    // table would force — or the per-execution BroadcastHashJoin rebuild
-    // the fallback pays. The 600M-row aggregate still groups on the
-    // BARE key (both attributes are functionally dependent on it) and
-    // re-probes the cached table on just the top-10 rows.
+    // table would force, or a per-execution BroadcastHashJoin rebuild.
+    // The 600M-row aggregate still groups on the BARE key (both
+    // attributes are functionally dependent on it) and re-probes the
+    // cached table on just the top-10 rows.
     Q("q3b_priority_detail",
       (s, dir) => {
         val c = t(s, dir, "customer")
@@ -159,37 +145,24 @@ object Headline {
           sum(cents(col("l_extendedprice") * (lit(1) - col("l_discount"))))
         val reconstructed =
           timestamp_micros(col("_od")).cast("timestamp_ntz")
-        if (ocG.broadcasted) {
-          // ONE arity-2 table serves both sides of the reduction: the
-          // 600M-row hot path probes it existence-only (semi — field-0
-          // probe, no columns attached), the 10-row top-k re-probes it
-          // to attach both attributes
-          val pay = Seq("_od", "o_custkey")
-          LookupJoin.semi(l0, col("l_orderkey"), ocG.bare,
-              "o_orderkey", pay)
-            .groupBy(col("l_orderkey").as("o_orderkey"))
-            .agg(revenue.as("revenue_c"))
-            .orderBy(desc_nulls_last("revenue_c"),
-              asc_nulls_first("o_orderkey"))
-            .limit(10)
-            .transform(top => LookupJoin.inner(top, col("o_orderkey"),
-              ocG.bare, "o_orderkey", pay.map(p => p -> p)))
-            .select(col("o_orderkey"),
-              reconstructed.as("o_orderdate"), col("o_custkey"),
-              col("revenue_c"))
-            .orderBy(desc_nulls_last("revenue_c"),
-              asc_nulls_first("o_orderkey"))
-        } else {
-          val lg = RuntimeFilters.shuffleGuard(l0, "l_orderkey", ocG,
-            "o_orderkey")
-          lg.join(ocG.df, ocG.df("o_orderkey") === lg("l_orderkey"))
-            .groupBy(col("o_orderkey"),
-              reconstructed.as("o_orderdate"), col("o_custkey"))
-            .agg(revenue.as("revenue_c"))
-            .orderBy(desc_nulls_last("revenue_c"),
-              asc_nulls_first("o_orderkey"))
-            .limit(10)
-        }
+        // ONE arity-2 table serves both sides of the reduction: the
+        // 600M-row hot path probes it existence-only (semi — field-0
+        // probe, no columns attached), the 10-row top-k re-probes it
+        // to attach both attributes
+        val pay = Seq("_od", "o_custkey")
+        LookupJoin.semi(l0, col("l_orderkey"), ocG, "o_orderkey", pay)
+          .groupBy(col("l_orderkey").as("o_orderkey"))
+          .agg(revenue.as("revenue_c"))
+          .orderBy(desc_nulls_last("revenue_c"),
+            asc_nulls_first("o_orderkey"))
+          .limit(10)
+          .transform(top => LookupJoin.inner(top, col("o_orderkey"),
+            ocG, "o_orderkey", pay.map(p => p -> p)))
+          .select(col("o_orderkey"),
+            reconstructed.as("o_orderdate"), col("o_custkey"),
+            col("revenue_c"))
+          .orderBy(desc_nulls_last("revenue_c"),
+            asc_nulls_first("o_orderkey"))
       },
       Some("""SELECT o_orderkey, o_orderdate, o_custkey,
              | CAST(SUM(CAST(ROUND(l_extendedprice*(1-l_discount)*100) AS BIGINT)) AS BIGINT) AS revenue_c
@@ -209,9 +182,9 @@ object Headline {
         // the lineitem scan, so the fact table never shuffles — measured
         // 3.64 -> 2.37 s at the 100x replica (DuckDB parity). The oc side
         // is ~2M 16-byte rows at 100x (~36 MB by cache stats), inside the
-        // default gate; at a scale where it outgrows the gate the plan
-        // degrades to the shuffle join this query used before. Only
-        // remaining exchange: the 5-row final aggregate's.
+        // default gate; at a scale where it outgrows the gate the same
+        // calls take the Bloom-guarded shuffle join. Only remaining
+        // exchange: the 5-row final aggregate's.
         //
         // The region predicate reaches customers only TRANSITIVELY
         // (c_nationkey = s_nationkey = n_nationkey, r_name = 'ASIA') and
@@ -236,60 +209,41 @@ object Headline {
         val ocG = Broadcasts.gatedStats(
           o.join(broadcast(c), c("c_custkey") === o("o_custkey"))
             .select("o_orderkey", "c_nationkey"))
-        val su = t(s, dir, "supplier").select("s_suppkey", "s_nationkey")
+        val suG = Broadcasts.gatedStats(
+          t(s, dir, "supplier").select("s_suppkey", "s_nationkey"))
         val l0 = t(s, dir, "lineitem")
           .select("l_orderkey", "l_suppkey", "l_extendedprice", "l_discount")
         // Inside the pin budget the oc side is a unique-orderkey, one-
         // attribute dimension — exactly LookupJoin's shape: the compact
         // long→long table is built+broadcast ONCE per session and the
         // fact probes it in codegen, where a BroadcastHashJoin would
-        // rebuild its relation on the driver EVERY execution (measured
-        // at the 1000× replica: 2.12 s of q5's 5.08 s warm was that
-        // rebuild — ProfileQ5Parts2 / BLOOMGUARD_MEASURE adjudicated
-        // the Bloom alternative as strictly worse). Past the gate the
-        // join shuffles, with a Bloom of the surviving orderkeys
-        // keeping ~6/7 of lineitem out of the fact shuffle.
-        val lj = if (ocG.broadcasted)
-          LookupJoin.inner(l0, col("l_orderkey"), ocG.bare,
-            "o_orderkey", "c_nationkey", "c_nationkey")
-        else {
-          val lg = RuntimeFilters.shuffleGuard(l0, "l_orderkey", ocG,
-            "o_orderkey")
-          lg.join(ocG.df, ocG.df("o_orderkey") === lg("l_orderkey"))
-        }
+        // rebuild its relation on the driver EVERY execution (the Bloom
+        // alternative on this path measured strictly worse at the 1000×
+        // replica: bare 5.6 s vs 6.6–14.1 s, BLOOMGUARD_MEASURE.json).
+        //
+        // r17: the supplier side is ALSO a unique-long-key dimension
+        // (s_suppkey → s_nationkey), so the hot path probes it as a
+        // second cached lookup table; the nation⋈region joins and the
+        // n_name group key leave the fact grain entirely — the 600M-row
+        // aggregate groups on the BARE nationkey (a long, narrower
+        // exchange) and n_name attaches to the ≤25-row partial result,
+        // re-aggregated BY NAME so the declared GROUP BY n_name
+        // semantics hold even under duplicate names (two-level
+        // aggregate, guide §2.3/§2.4).
         val revenue =
           sum(cents(col("l_extendedprice") * (lit(1) - col("l_discount"))))
-        val suG = Broadcasts.gatedStats(su)
-        if (ocG.broadcasted && suG.broadcasted) {
-          // r17: the supplier side is ALSO a unique-long-key dimension
-          // (s_suppkey → s_nationkey), so the hot path probes it as a
-          // second cached lookup table instead of a BroadcastHashJoin
-          // that rebuilds its relation every execution; the nation⋈
-          // region joins and the n_name group key leave the fact grain
-          // entirely — the 600M-row aggregate groups on the BARE
-          // nationkey (a long, narrower exchange) and n_name attaches
-          // to the ≤25-row partial result, re-aggregated BY NAME so the
-          // declared GROUP BY n_name semantics hold even under
-          // duplicate names (two-level aggregate, guide §2.3/§2.4).
-          LookupJoin.inner(lj, col("l_suppkey"), suG.bare,
-              "s_suppkey", "s_nationkey", "_snk")
-            .filter(col("_snk") === col("c_nationkey"))
-            .groupBy(col("_snk"))
-            .agg(revenue.as("_rev_part"))
-            .join(broadcast(n), n("n_nationkey") === col("_snk"))
-            .join(broadcast(r), r("r_regionkey") === n("n_regionkey"))
-            .groupBy(col("n_name"))
-            .agg(sum(col("_rev_part")).as("revenue_c"))
-            .orderBy(desc_nulls_last("revenue_c"), asc_nulls_first("n_name"))
-        } else {
-          lj.join(broadcast(su),
-              su("s_suppkey") === lj("l_suppkey") && su("s_nationkey") === col("c_nationkey"))
-            .join(broadcast(n), n("n_nationkey") === su("s_nationkey"))
-            .join(broadcast(r), r("r_regionkey") === n("n_regionkey"))
-            .groupBy(col("n_name"))
-            .agg(revenue.as("revenue_c"))
-            .orderBy(desc_nulls_last("revenue_c"), asc_nulls_first("n_name"))
-        }
+        LookupJoin.inner(l0, col("l_orderkey"), ocG,
+            "o_orderkey", "c_nationkey", "c_nationkey")
+          .transform(lj => LookupJoin.inner(lj, col("l_suppkey"), suG,
+            "s_suppkey", "s_nationkey", "_snk"))
+          .filter(col("_snk") === col("c_nationkey"))
+          .groupBy(col("_snk"))
+          .agg(revenue.as("_rev_part"))
+          .join(broadcast(n), col("n_nationkey") === col("_snk"))
+          .join(broadcast(r), col("r_regionkey") === col("n_regionkey"))
+          .groupBy(col("n_name"))
+          .agg(sum(col("_rev_part")).as("revenue_c"))
+          .orderBy(desc_nulls_last("revenue_c"), asc_nulls_first("n_name"))
       },
       Some("""SELECT n_name,
              | CAST(SUM(CAST(ROUND(l_extendedprice*(1-l_discount)*100) AS BIGINT)) AS BIGINT) AS revenue_c

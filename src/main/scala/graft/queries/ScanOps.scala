@@ -104,9 +104,9 @@ object ScanOps {
   }
 
   /** fp1 stretch depth: enough per-row work that core count is visible
-    * over the per-query floor at bench scale (~1.5k MINSTD rounds ≈ a
-    * few µs/row), small enough that the query stays a sub-second suite
-    * member at full cores. MINSTD (Park-Miller, x→x·48271 mod 2³¹−1)
+    * over the per-query floor at bench scale (6k dependent MINSTD
+    * rounds per row), small enough that the query stays a sub-second
+    * suite member at full cores. MINSTD (Park-Miller, x→x·48271 mod 2³¹−1)
     * because the iterate is exact in 64-bit integers (product < 2⁴⁷)
     * and, being linear, has the closed form x_K = x₀·48271^K mod M the
     * oracle verifies with ONE exact BIGINT multiply — no giant SQL

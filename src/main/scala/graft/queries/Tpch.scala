@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.operators.{Broadcasts, LookupJoin, RuntimeFilters}
+import graft.operators.{Broadcasts, LookupJoin}
 import graft.sources.Tables
 
 /** TPC-H-shaped subquery/predicate workloads (adapted to the driver
@@ -110,7 +110,8 @@ object Tpch {
     // groups on the BARE key pair + year; names attach to the ≤ 3·3·7-
     // row partial and re-aggregate BY NAME with the name-inequality
     // re-applied, so the declared GROUP-BY-name semantics hold even
-    // under duplicate names. Past the pin budget the old shape runs.
+    // under duplicate names. Past the pin budget the same calls
+    // shuffle-join the two persisted sides, Bloom-guarded.
     Q("q7_volume_shipping",
       (s, dir) => {
         val su = t(s, dir, "supplier").select("s_suppkey", "s_nationkey")
@@ -134,34 +135,19 @@ object Tpch {
           o.join(broadcast(cP), cP("c_custkey") === o("o_custkey"))
             .select("o_orderkey", "c_nationkey"))
         val suG = Broadcasts.gatedStats(suP)
-        if (ocG.broadcasted && suG.broadcasted) {
-          val lj = LookupJoin.inner(l, col("l_orderkey"), ocG.bare,
+        LookupJoin.inner(l, col("l_orderkey"), ocG,
             "o_orderkey", "c_nationkey", "_cnk")
-          LookupJoin.inner(lj, col("l_suppkey"), suG.bare,
-              "s_suppkey", "s_nationkey", "_snk")
-            .filter(col("_snk") =!= col("_cnk"))
-            .groupBy(col("_snk"), col("_cnk"), col("l_year"))
-            .agg(sum(cents(col("l_extendedprice") * (lit(1) - col("l_discount")))).as("_rev_part"))
-            .join(broadcast(n1), col("sn_key") === col("_snk"))
-            .join(broadcast(n2), col("cn_key") === col("_cnk"))
-            .filter(col("supp_nation") =!= col("cust_nation"))
-            .groupBy("supp_nation", "cust_nation", "l_year")
-            .agg(sum(col("_rev_part")).as("revenue_c"))
-            .orderBy("supp_nation", "cust_nation", "l_year")
-        } else {
-          val j = l.join(o, l("l_orderkey") === o("o_orderkey"))
-            .join(broadcast(su), l("l_suppkey") === su("s_suppkey"))
-            .join(broadcast(c), o("o_custkey") === c("c_custkey"))
-            .join(broadcast(n1), su("s_nationkey") === n1("sn_key"))
-            .join(broadcast(n2), c("c_nationkey") === n2("cn_key"))
-            .filter(
-              col("supp_nation").isin(pairNations: _*) &&
-              col("cust_nation").isin(pairNations: _*) &&
-              col("supp_nation") =!= col("cust_nation"))
-          j.groupBy("supp_nation", "cust_nation", "l_year")
-            .agg(sum(cents(col("l_extendedprice") * (lit(1) - col("l_discount")))).as("revenue_c"))
-            .orderBy("supp_nation", "cust_nation", "l_year")
-        }
+          .transform(lj => LookupJoin.inner(lj, col("l_suppkey"), suG,
+            "s_suppkey", "s_nationkey", "_snk"))
+          .filter(col("_snk") =!= col("_cnk"))
+          .groupBy(col("_snk"), col("_cnk"), col("l_year"))
+          .agg(sum(cents(col("l_extendedprice") * (lit(1) - col("l_discount")))).as("_rev_part"))
+          .join(broadcast(n1), col("sn_key") === col("_snk"))
+          .join(broadcast(n2), col("cn_key") === col("_cnk"))
+          .filter(col("supp_nation") =!= col("cust_nation"))
+          .groupBy("supp_nation", "cust_nation", "l_year")
+          .agg(sum(col("_rev_part")).as("revenue_c"))
+          .orderBy("supp_nation", "cust_nation", "l_year")
       },
       Some("""SELECT supp_nation, cust_nation, l_year,
              | CAST(SUM(CAST(ROUND(volume*100) AS BIGINT)) AS BIGINT) AS revenue_c
@@ -212,7 +198,7 @@ object Tpch {
     // 600M-row hot path groups on the BARE custkey (names are
     // functionally dependent on it) behind an existence-only code
     // probe, and the strings decode on just the top-20 rows. Past
-    // either gate the plan degrades to the shuffle join, Bloom-guarded.
+    // either gate that side's calls take the Bloom-guarded shuffle join.
     Q("q10_returned_items",
       (s, dir) => {
         val n = t(s, dir, "nation")
@@ -230,34 +216,22 @@ object Tpch {
         val revenue =
           sum(cents(col("l_extendedprice") * (lit(1) - col("l_discount"))))
             .as("revenue_c")
-        if (oG.broadcasted && custDimG.broadcasted) {
-          val pay = Seq("c_name", "n_name")
-          LookupJoin.inner(l, col("l_orderkey"), oG.bare,
-              "o_orderkey", "o_custkey", "_ck")
-            .transform(lo => LookupJoin.semi(lo, col("_ck"),
-              custDimG.bare, "c_custkey", pay))
-            .groupBy(col("_ck").as("c_custkey"))
-            .agg(revenue)
-            .orderBy(desc_nulls_last("revenue_c"),
-              asc_nulls_first("c_custkey"))
-            .limit(20)
-            .transform(top => LookupJoin.inner(top, col("c_custkey"),
-              custDimG.bare, "c_custkey", pay.map(p => p -> p)))
-            .select(col("c_custkey"), col("c_name"), col("n_name"),
-              col("revenue_c"))
-            .orderBy(desc_nulls_last("revenue_c"),
-              asc_nulls_first("c_custkey"))
-        } else {
-          val lg = RuntimeFilters.shuffleGuard(l, "l_orderkey", oG,
-            "o_orderkey")
-          lg.join(oG.df, oG.df("o_orderkey") === lg("l_orderkey"))
-            .join(custDimG.df, col("o_custkey") === col("c_custkey"))
-            .groupBy("c_custkey", "c_name", "n_name")
-            .agg(revenue)
-            .orderBy(desc_nulls_last("revenue_c"),
-              asc_nulls_first("c_custkey"))
-            .limit(20)
-        }
+        val pay = Seq("c_name", "n_name")
+        LookupJoin.inner(l, col("l_orderkey"), oG,
+            "o_orderkey", "o_custkey", "_ck")
+          .transform(lo => LookupJoin.semi(lo, col("_ck"),
+            custDimG, "c_custkey", pay))
+          .groupBy(col("_ck").as("c_custkey"))
+          .agg(revenue)
+          .orderBy(desc_nulls_last("revenue_c"),
+            asc_nulls_first("c_custkey"))
+          .limit(20)
+          .transform(top => LookupJoin.inner(top, col("c_custkey"),
+            custDimG, "c_custkey", pay.map(p => p -> p)))
+          .select(col("c_custkey"), col("c_name"), col("n_name"),
+            col("revenue_c"))
+          .orderBy(desc_nulls_last("revenue_c"),
+            asc_nulls_first("c_custkey"))
       },
       Some("""SELECT c_custkey, c_name, n_name,
              | CAST(SUM(CAST(ROUND(l_extendedprice*(1-l_discount)*100) AS BIGINT)) AS BIGINT) AS revenue_c
@@ -622,8 +596,8 @@ object Tpch {
     // EVERY execution (guide §3.1/§2.3; at the 1000× replica the hint
     // shipped a 20M-row side per run). The fact-side filter keeps only
     // the per-class quantity range — same surviving rows, narrower
-    // probe, no strings on the hot path. Past the pin budget the plan
-    // degrades to the Bloom-guarded shuffle join.
+    // probe, no strings on the hot path. Past the pin budget the same
+    // call takes the Bloom-guarded shuffle join.
     Q("q19_disjunctive",
       (s, dir) => {
         val p = t(s, dir, "part").select("p_partkey", "p_brand", "p_size")
@@ -636,15 +610,8 @@ object Tpch {
             .filter(col("_cls").isNotNull))
         val l = t(s, dir, "lineitem")
           .select(col("l_partkey"), col("l_quantity"), col("l_extendedprice"), col("l_discount"))
-        val j = if (pcG.broadcasted)
-          LookupJoin.inner(l, col("l_partkey"), pcG.bare,
-            "p_partkey", "_cls", "_cls")
-        else {
-          val lg = RuntimeFilters.shuffleGuard(l, "l_partkey", pcG,
-            "p_partkey")
-          lg.join(pcG.df, pcG.df("p_partkey") === lg("l_partkey"))
-        }
-        j.filter(
+        LookupJoin.inner(l, col("l_partkey"), pcG, "p_partkey", "_cls", "_cls")
+          .filter(
             (col("_cls") === 1 && col("l_quantity").between(1, 11)) ||
             (col("_cls") === 2 && col("l_quantity").between(10, 20)) ||
             (col("_cls") === 3 && col("l_quantity").between(20, 30)))

@@ -15,9 +15,9 @@ object DumpPlans {
       "q1_pricing_summary" ->
         "One scan; date filter and 7-column pruned schema pushed into parquet; partial+final HashAggregate.",
       "q3_shipping_priority" ->
-        "Filters pushed to all three scans; TakeOrderedAndProject top-10 (no global sort). The reduced (orders x customer) side attaches via LookupJoin, the q5 shape: a unique-orderkey long->long table built+broadcast ONCE per session and probed by the codegen'd graft_lookup expression inside the lineitem scan's Filter — where a BroadcastHashJoin rebuilt its relation on the driver every execution (8.00 -> 3.39 s warm at the 1000x replica, r14 -> r15 BENCHSCALE.json artifacts — 1.95x -> 1.03x of DuckDB). The order date is functionally dependent on the order key, so the 600M-row aggregate groups on the BARE key (one probe per row, in the filter only; key+sum-only exchange — 190 -> 148 MB at 1000x) and the micros-packed date re-probes the same cached table on just the top-10 rows, reconstructed as timestamp_ntz. Only exchange: the aggregate's. Past the pin budget the plan degrades to the shuffle join with RuntimeFilters.shuffleGuard (measured AT the forced-shuffle 1000x arm: bare 39.6s vs guarded 8.5s — BLOOMGUARD_MEASURE.json; the Bloom on the BROADCAST path was measured and rejected).",
+        "Filters pushed to all three scans; TakeOrderedAndProject top-10 (no global sort). The reduced (orders x customer) side attaches via LookupJoin, the q5 shape: a unique-orderkey long->long table built+broadcast ONCE per session and probed by the codegen'd graft_lookup expression inside the lineitem scan's Filter — where a BroadcastHashJoin rebuilt its relation on the driver every execution (8.00 -> 3.39 s warm at the 1000x replica, r14 -> r15 BENCHSCALE.json artifacts — 1.95x -> 1.03x of DuckDB). The order date is functionally dependent on the order key, so the 600M-row aggregate groups on the BARE key (one probe per row, in the filter only; key+sum-only exchange — 190 -> 148 MB at 1000x) and the micros-packed date re-probes the same cached table on just the top-10 rows, reconstructed as timestamp_ntz. Only exchange: the aggregate's. Past the pin budget the same LookupJoin calls take their other branch: a shuffle join against the materialized side with a Bloom of its keys on the lineitem scan (measured AT the forced-shuffle 1000x arm: bare 39.6s vs guarded 8.5s — BLOOMGUARD_MEASURE.json; the Bloom on the BROADCAST path was measured and rejected).",
       "q5_local_supplier" ->
-        "Fact table never shuffles, and the reduced (orders x customer) side attaches via LookupJoin: a unique-orderkey long->long table built+broadcast ONCE per session, probed by the codegen'd graft_lookup expression in the Filter below - where a BroadcastHashJoin would rebuild its relation on the driver EVERY execution (measured at the 1000x replica: 2.12s of 5.08s warm was that rebuild; lookup cuts q5 to 3.11s, 1.38x DuckDB). supplier/nation/region broadcast; the only exchange is the 5-row final aggregate's. Past the pin budget the plan degrades to the shuffle join with RuntimeFilters.shuffleGuard keeping ~6/7 of lineitem out of the fact shuffle (the Bloom on the BROADCAST path was measured and rejected - BLOOMGUARD_MEASURE.json).",
+        "Fact table never shuffles: the reduced (orders x customer) side and the supplier side each attach via LookupJoin — a unique-key long->long table built+broadcast ONCE per session, probed by the codegen'd graft_lookup expression in the Filter below, where a BroadcastHashJoin would rebuild its relation on the driver EVERY execution. The aggregate groups on the bare nation key; nation/region broadcast onto the <=25-row partial; the only exchange is the final aggregate's. Past the pin budget the same LookupJoin calls shuffle-join the materialized sides, with a Bloom of the orderkeys on the lineitem scan keeping ~6/7 of it out of the fact shuffle (the Bloom on the BROADCAST path was measured and rejected - BLOOMGUARD_MEASURE.json: bare 5.6s vs 6.6-14.1s at 1000x).",
       "q3b_priority_detail" ->
         "q3 with the full detail projection (order date AND customer key) — the multi-attribute LookupJoin adoption: ONE arity-2 slot-major table serves both the 600M-row existence probe (graft_lookup field 0 in the scan Filter, no columns attached) and the post-top-10 re-probe that attaches both attributes. Same single-exchange shape as q3; measured at the 1000x replica: 3.30s warm vs 8.12s for the BroadcastHashJoin shape and 3.42s for two packed arity-1 tables (LOOKUP_ARITY_MEASURE.json).",
       "tx14_quality_classifier" ->

@@ -99,6 +99,18 @@ class LlmOpsSpec extends SparkSpec {
     assert(!pairs.exists(p => p._1 == 4L || p._2 == 4L))
   }
 
+  test("minhash fan-out survives passenger columns named with a dot " +
+      "or a backtick") {
+    val text = "the quick brown fox jumps over the lazy dog again and again"
+    val fixture = Seq((1L, text, "a", 1L), (2L, text, "b", 2L),
+      (3L, "an unrelated document about medieval castle walls", "c", 3L))
+      .toDF("doc_id", "text", "src.path", "odd`name")
+    assert(Dedup.minHashBands(fixture, "doc_id", "text").count() === 3L * 32)
+    assert(Dedup.minHashDedup(fixture, "doc_id", "text")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet ===
+      Set((1L, 2L)))
+  }
+
   test("dropNearDuplicates keeps one representative per cluster") {
     val base = "spark shuffles partition data across executors while catalyst " +
       "optimizes logical plans into efficient physical operators for scans " +

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Broadcasts, RuntimeFilters}
+import graft.operators.{Broadcasts, LookupJoin, RuntimeFilters}
 
 /** The hand-pushed runtime Bloom filter (q3/q5's fact-side pre-probe)
   * must be SEMANTICALLY INVISIBLE — it may only pass extra rows the
@@ -18,7 +18,7 @@ class RuntimeFiltersSpec extends SparkSpec {
       .select(col("id").as("k"))
     val fact = spark.range(0, 5000)
       .select(col("id").as("fk"), (col("id") * 2).as("v"))
-    val filtered = RuntimeFilters.keyFilter(fact, "fk", side, "k", 715L)
+    val filtered = RuntimeFilters.keyFilter(fact, col("fk"), side, "k", 715L)
     // zero false negatives: every fact row whose key IS in the side
     // survives the sketch (Bloom guarantees this; the spec pins the
     // build/probe hashing agreement — raw longs both ends)
@@ -41,7 +41,7 @@ class RuntimeFiltersSpec extends SparkSpec {
     RuntimeFilters.reset()
     val side = Seq(1L, 2L).toDF("k")
     val fact = Seq(Some(1L), None, Some(9L)).toDF("fk")
-    val filtered = RuntimeFilters.keyFilter(fact, "fk", side, "k", 2L)
+    val filtered = RuntimeFilters.keyFilter(fact, col("fk"), side, "k", 2L)
     assert(filtered.collect().map(_.getLong(0)).toSet === Set(1L))
     RuntimeFilters.reset()
   }
@@ -51,9 +51,9 @@ class RuntimeFiltersSpec extends SparkSpec {
     RuntimeFilters.reset()
     def side = spark.range(0, 100).select(col("id").as("k"))
     def fact = spark.range(0, 1000).select(col("id").as("fk"))
-    RuntimeFilters.keyFilter(fact, "fk", side, "k", 100L).count()
+    RuntimeFilters.keyFilter(fact, col("fk"), side, "k", 100L).count()
     assert(RuntimeFilters.cachedCount === 1)
-    RuntimeFilters.keyFilter(fact, "fk", side, "k", 100L).count()
+    RuntimeFilters.keyFilter(fact, col("fk"), side, "k", 100L).count()
     assert(RuntimeFilters.cachedCount === 1, "same plan rebuilt the sketch")
     RuntimeFilters.reset()
     assert(RuntimeFilters.cachedCount === 0)
@@ -63,49 +63,59 @@ class RuntimeFiltersSpec extends SparkSpec {
     RuntimeFilters.reset()
     val side = spark.range(0, 10).select(col("id").as("k"))
     val fact = spark.range(0, 100).select(col("id").as("fk"))
-    val out = RuntimeFilters.keyFilter(fact, "fk", side, "k",
+    val out = RuntimeFilters.keyFilter(fact, col("fk"), side, "k",
       RuntimeFilters.MaxKeys + 1)
     assert(out eq fact, "over-budget side must return the fact unchanged")
     assert(RuntimeFilters.cachedCount === 0)
     // empty side: nothing to filter against — fact unchanged, join
     // yields zero rows anyway
-    assert(RuntimeFilters.keyFilter(fact, "fk", side.limit(0), "k", 0L)
+    assert(RuntimeFilters.keyFilter(fact, col("fk"), side.limit(0), "k", 0L)
       eq fact)
     RuntimeFilters.reset()
   }
 
-  test("shuffleGuard arms ONLY past the broadcast gate: bare pass-through " +
-      "when the side broadcasts, might_contain on the fact when it " +
-      "shuffles — same rows either way") {
+  test("the gated LookupJoin arms the Bloom guard ONLY past the " +
+      "broadcast gate: bare probe when the side broadcasts, " +
+      "might_contain on the fact when it shuffles — same rows either way") {
     Broadcasts.reset()
+    LookupJoin.reset()
     RuntimeFilters.reset()
     val side = spark.range(0, 20000).filter(col("id") % 5 === 0)
       .select(col("id").as("k"), (col("id") % 7).as("tag"))
     val fact = spark.range(0, 20000)
       .select(col("id").as("fk"), (col("id") * 3).as("v"))
+    val want = fact.join(side, col("fk") === col("k"))
+      .select("fk", "v", "tag").collect().map(_.toSeq).toSet
 
-    // broadcast path (default gate): the guard must NOT plant a sketch —
-    // the bare hash-relation probe measured faster at the 1000× replica
+    // broadcast path (default gate): the overload must NOT plant a
+    // sketch — the bare probe measured faster at the 1000× replica
     val bcast = Broadcasts.gatedStats(side)
     assert(bcast.broadcasted)
-    val bareFact = RuntimeFilters.shuffleGuard(fact, "fk", bcast, "k")
-    assert(bareFact eq fact, "guard planted a sketch on the broadcast path")
+    val probed = LookupJoin.inner(fact, col("fk"), bcast, "k", "tag", "tag")
+    val probedPlan = probed.queryExecution.optimizedPlan.toString
+    assert(!probedPlan.contains("might_contain"),
+      "guard planted a sketch on the broadcast path")
+    assert(probedPlan.contains("graft_lookup"))
+    assert(probed.collect().map(_.toSeq).toSet === want)
 
     // shuffle path (gate = 0 refuses the broadcast): the sketch keeps
     // droppable rows out of the fact shuffle
     val shuffled = Broadcasts.gatedStats(side, maxBytes = 0L)
     assert(!shuffled.broadcasted && shuffled.rows === 4000L)
-    val guarded = RuntimeFilters.shuffleGuard(fact, "fk", shuffled, "k")
-    assert(guarded.queryExecution.optimizedPlan.toString
-      .contains("might_contain"), "shuffle path lost its runtime filter")
-    assert(guarded.count() < fact.count(),
+    val guarded = LookupJoin.inner(fact, col("fk"), shuffled, "k",
+      "tag", "tag")
+    val guardedPlan = guarded.queryExecution.optimizedPlan.toString
+    assert(guardedPlan.contains("might_contain"),
+      "shuffle path lost its runtime filter")
+    assert(!guardedPlan.contains("graft_lookup"))
+    assert(RuntimeFilters.keyFilter(fact, col("fk"), shuffled.bare, "k",
+      shuffled.rows).count() < fact.count(),
       "sketch filtered nothing on the shuffle path")
-    val got = guarded.join(shuffled.df, col("fk") === col("k"))
-      .select("fk", "v", "tag").collect().map(_.toSeq).toSet
-    val want = fact.join(side, col("fk") === col("k"))
-      .select("fk", "v", "tag").collect().map(_.toSeq).toSet
-    assert(got === want, "guarded shuffle join diverged from bare")
+    assert(guarded.schema === probed.schema)
+    assert(guarded.collect().map(_.toSeq).toSet === want,
+      "guarded shuffle join diverged from bare")
     Broadcasts.reset()
+    LookupJoin.reset()
     RuntimeFilters.reset()
   }
 
@@ -117,7 +127,7 @@ class RuntimeFiltersSpec extends SparkSpec {
     spark.range(0, 100).select(col("id").as("k"))
       .write.mode("overwrite").parquet(dir)
     val fact = spark.range(0, 200).select(col("id").as("fk"))
-    def kept(): Long = RuntimeFilters.keyFilter(fact, "fk",
+    def kept(): Long = RuntimeFilters.keyFilter(fact, col("fk"),
       spark.read.parquet(dir), "k", 100L).count()
     val fresh = kept()
     assert(fresh >= 100 && fresh < 200) // fp may pass a few extras
