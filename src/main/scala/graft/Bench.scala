@@ -130,10 +130,17 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = session(sfDir, cpus)
 
+    // A failed run reports -1; the class of what it threw goes to the
+    // diagnostics, per query (the last one seen), so a -1 can be told
+    // apart as an OOM, a planner error or a missing input
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def failed(name: String, e: Throwable): Unit =
+      errors(name) = e.getClass.getName
+
     def once(name: String): Double = {
       val t0 = System.nanoTime()
       try { SparkEntry.queries(name)(spark, sfDir).count() }
-      catch { case _: Throwable => return -1.0 }
+      catch { case e: Throwable => failed(name, e); return -1.0 }
       (System.nanoTime() - t0) / 1e9
     }
 
@@ -150,8 +157,9 @@ object Bench {
       // and keep its handle. The action must be collect(): head() would
       // plan ANOTHER limit query and leave this one's metrics at zero.
       val counted = try SparkEntry.queries(name)(spark, sfDir).groupBy().count()
-        catch { case _: Throwable => return (-1.0, 0.0, 0.0) }
-      try counted.collect() catch { case _: Throwable => return (-1.0, 0.0, 0.0) }
+        catch { case e: Throwable => failed(name, e); return (-1.0, 0.0, 0.0) }
+      try counted.collect()
+      catch { case e: Throwable => failed(name, e); return (-1.0, 0.0, 0.0) }
       val sec = (System.nanoTime() - t0) / 1e9
       val nodes = planNodes(counted.queryExecution.executedPlan)
       def mb(key: String): Double = math.round(nodes
@@ -262,6 +270,8 @@ object Bench {
     val gcs = field(_.gcMs)
     val runsJson = field(_.warmRuns.mkString("[", ",", "]"))
     val cachedBefore = field(_.cachedMbBefore)
+    val errorsJson = errors.map { case (q, c) => "\"" + q + "\":\"" + c + "\"" }
+      .mkString("{", ",", "}")
     // failed queries report -1 individually but must not corrupt the total
     val total = results.map(_.warm).filter(_ >= 0).sum
     val coldTotal = results.map(_.cold).filter(_ >= 0).sum
@@ -280,7 +290,7 @@ object Bench {
     // headline, values rounded to 3 decimals so the 7-query set sits
     // comfortably under the window.
     val diagJson =
-      s"""{"metric":"diagnostics","warm_runs":$runsJson,"gc_ms":$gcs,"cached_mb_before":$cachedBefore,"mem_start":${memJson(memStart)},"mem_end":${memJson(memEnd)},"sf":"$sfDir"}"""
+      s"""{"metric":"diagnostics","warm_runs":$runsJson,"gc_ms":$gcs,"cached_mb_before":$cachedBefore,"errors":$errorsJson,"mem_start":${memJson(memStart)},"mem_end":${memJson(memEnd)},"sf":"$sfDir"}"""
     val qsR = results.map(r => "\"" + r.name + "\":" + r3(r.warm))
       .mkString("{", ",", "}")
     val coldsR = results.map(r => "\"" + r.name + "\":" + r3(r.cold))

@@ -46,17 +46,28 @@ object IncrementalAgg {
   }
 
   /** Merge new fact rows into a stored aggregate: aggregate the delta,
-    * union with the stored frame, re-combine per key. Base-only groups
-    * pass through (a one-row group re-aggregates to itself), new groups
-    * appear, shared groups fold. Output schema equals `aggregate`'s, so
-    * the result can be stored back and refreshed again.
+    * then [[fold]] it in. Base-only groups pass through (a one-row group
+    * re-aggregates to itself), new groups appear, shared groups fold.
+    * Output schema equals `aggregate`'s, so the result can be stored
+    * back and refreshed again.
     */
   def refresh(storedAgg: DataFrame, deltaFacts: DataFrame, keys: Seq[String],
+      aggs: Seq[AggSpec]): DataFrame =
+    fold(storedAgg, aggregate(deltaFacts, keys, aggs), keys, aggs)
+
+  /** Union first-pass partials into a stored aggregate and re-combine per
+    * `keys`. `partials` carries every column of `stored` at `keys` grain
+    * or finer (extra columns are dropped), so a key-grain delta joined to
+    * a dimension folds straight into a group-grain view. Each output
+    * keeps the stored column's type, so a folded state folds again
+    * without widening.
+    */
+  def fold(stored: DataFrame, partials: DataFrame, keys: Seq[String],
       aggs: Seq[AggSpec]): DataFrame = {
-    val deltaAgg = aggregate(deltaFacts, keys, aggs)
-    val combined = aggs.map(a => combinePass(a.fn, col(a.out)).as(a.out))
-    storedAgg.select(storedAgg.columns.map(col).toIndexedSeq: _*)
-      .unionByName(deltaAgg.select(storedAgg.columns.map(col).toIndexedSeq: _*))
+    val cols = stored.columns.map(col).toIndexedSeq
+    val combined = aggs.map(a => combinePass(a.fn, col(a.out))
+      .cast(stored.schema(a.out).dataType).as(a.out))
+    stored.select(cols: _*).unionByName(partials.select(cols: _*))
       .groupBy(keys.map(col): _*).agg(combined.head, combined.tail: _*)
   }
 
@@ -168,6 +179,22 @@ object IncrementalAgg {
       .groupBy(groupCols.map(col): _*).agg(combined.head, combined.tail: _*)
   }
 
+  /** Static-dimension fact fold — the fast path when no dimension
+    * changelog rides along: `keyAgg' = fold(keyAgg, ΔK)` and
+    * `view' = fold(view, ΔK ⋈ dim)`, where ΔK is the fact delta already
+    * aggregated to join-key grain ([[aggregate]] over `joinKeys`). The
+    * self-decomposable functions fold a group's new partials into its
+    * stored row, so no affected-group splice is needed; groups are
+    * matched by `groupBy`, which keeps NULL group attributes as one
+    * group. `dim` is carried over unchanged. Pin ΔK before calling: both
+    * folds read it.
+    */
+  def foldJoinView(jv: JoinView, deltaAgg: DataFrame,
+      joinKeys: Seq[String], groupCols: Seq[String],
+      aggs: Seq[AggSpec]): JoinView =
+    JoinView(fold(jv.keyAgg, deltaAgg, joinKeys, aggs), jv.dim,
+      fold(jv.view, deltaAgg.join(jv.dim, joinKeys), groupCols, aggs))
+
   /** null-safe equi-condition on shared column names between two aliased
     * frames — group attributes can be NULL, and a plain equi-join would
     * silently keep a NULL group's stale row forever.
@@ -211,38 +238,46 @@ object IncrementalAgg {
       aggs: Seq[AggSpec], opCol: String = "op",
       deleteOp: String = "D"): JoinView =
     spliceRefresh(jv, refresh(jv.keyAgg, deltaFacts, joinKeys, aggs),
-      deltaFacts.select(joinKeys.map(col): _*), dimChanges, joinKeys,
-      groupCols, opCol, deleteOp,
-      (ka, d) => viewOf(ka, d, joinKeys, groupCols, aggs))
+      Some(deltaFacts.select(joinKeys.map(col): _*)), Some(dimChanges),
+      joinKeys, groupCols, aggs, counting = false, opCol, deleteOp)
 
   /** The shared dim-changelog + affected-group splice of the join-view
-    * refreshes: apply the changelog, derive the groups any touched key
-    * belonged to (old dim) or belongs to (new dim), recompute exactly
-    * those groups from the already-folded key-grain state, and splice
-    * them over the stored view (null-safe on group attrs).
+    * refreshes: apply the changelog (if any), derive the groups any
+    * touched key belonged to (old dim) or belongs to (new dim), recompute
+    * exactly those groups from the already-folded key-grain state
+    * `keyAgg2`, and splice them over the stored view (null-safe on group
+    * attrs). `factKeys` are the join keys whose key-grain rows changed;
+    * None means `keyAgg2` is the stored state unchanged. With no
+    * changelog the dim is carried over as the same frame. `counting`
+    * selects the [[buildRetractableJoinView]] roll-up.
     */
-  private def spliceRefresh(jv: JoinView, keyAgg2: DataFrame,
-      factKeys: DataFrame, dimChanges: DataFrame, joinKeys: Seq[String],
-      groupCols: Seq[String], opCol: String, deleteOp: String,
-      viewFn: (DataFrame, DataFrame) => DataFrame): JoinView = {
-    val changedKeys = dimChanges.select(joinKeys.map(col): _*).distinct()
-    val dim2 = jv.dim.join(changedKeys, joinKeys, "left_anti")
-      .unionByName(dimChanges.filter(col(opCol) =!= lit(deleteOp))
-        .select(jv.dim.columns.map(col).toIndexedSeq: _*))
+  private[graft] def spliceRefresh(jv: JoinView, keyAgg2: DataFrame,
+      factKeys: Option[DataFrame], dimChanges: Option[DataFrame],
+      joinKeys: Seq[String], groupCols: Seq[String], aggs: Seq[AggSpec],
+      counting: Boolean, opCol: String = "op",
+      deleteOp: String = "D"): JoinView = {
+    val changedKeys = dimChanges.map(_.select(joinKeys.map(col): _*).distinct())
+    val dim2 = dimChanges.fold(jv.dim)(ch =>
+      jv.dim.join(changedKeys.get, joinKeys, "left_anti")
+        .unionByName(ch.filter(col(opCol) =!= lit(deleteOp))
+          .select(jv.dim.columns.map(col).toIndexedSeq: _*)))
 
-    val affectedKeys = factKeys.unionByName(changedKeys).distinct()
-    val affectedGroups = jv.dim.join(affectedKeys, joinKeys, "left_semi")
-      .select(groupCols.map(col): _*)
-      .unionByName(dim2.join(affectedKeys, joinKeys, "left_semi")
+    val affectedKeys = (factKeys.toSeq ++ changedKeys)
+      .reduce(_ unionByName _).distinct()
+    val dims = if (dimChanges.isEmpty) Seq(jv.dim) else Seq(jv.dim, dim2)
+    val affectedGroups = dims
+      .map(_.join(affectedKeys, joinKeys, "left_semi")
         .select(groupCols.map(col): _*))
-      .distinct()
+      .reduce(_ unionByName _).distinct()
 
     // recompute ONLY the affected groups: restrict the dim first so the
     // key-grain join can broadcast the (usually tiny) affected slice
     val dimAffected = dim2.alias("__dn")
       .join(affectedGroups.alias("__ag"),
         nullSafeOn("__dn", "__ag", groupCols), "left_semi")
-    val recomputed = viewFn(keyAgg2, dimAffected)
+    val recomputed =
+      if (counting) viewOfCounting(keyAgg2, dimAffected, joinKeys, groupCols, aggs)
+      else viewOf(keyAgg2, dimAffected, joinKeys, groupCols, aggs)
     val view2 = jv.view.alias("__vw")
       .join(affectedGroups.alias("__ag"),
         nullSafeOn("__vw", "__ag", groupCols), "left_anti")
@@ -306,7 +341,6 @@ object IncrementalAgg {
       deleteOp: String = "D"): JoinView =
     spliceRefresh(jv,
       refreshCounting(jv.keyAgg, signedDeltas, joinKeys, aggs, signCol),
-      signedDeltas.select(joinKeys.map(col): _*), dimChanges, joinKeys,
-      groupCols, opCol, deleteOp,
-      (ka, d) => viewOfCounting(ka, d, joinKeys, groupCols, aggs))
+      Some(signedDeltas.select(joinKeys.map(col): _*)), Some(dimChanges),
+      joinKeys, groupCols, aggs, counting = true, opCol, deleteOp)
 }

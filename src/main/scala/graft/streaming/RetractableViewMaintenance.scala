@@ -20,10 +20,17 @@ import graft.operators.IncrementalAgg.{AggSpec, JoinView}
   * multiplicity + per-sum non-null witnesses): keys retracted to zero
   * rows vanish, a group whose last non-null measure is retracted
   * publishes SUM = NULL, and groups losing every key drop out of the
-  * view — full-recompute parity after any trigger. Per-trigger work is
-  * the trigger's own signed key-grain aggregate plus the affected-group
-  * splice; stored facts are never rescanned. localCheckpoint per merge
-  * keeps lineage flat across arbitrarily many triggers.
+  * view — full-recompute parity after any trigger. A trigger folds its
+  * signed key-grain aggregate into the counting state and pins the
+  * result once; the affected-group splice then re-derives the groups of
+  * the trigger's keys from that pinned state, so the view's checkpoint
+  * never recomputes the fold. The splice stays because a retraction can
+  * make a group vanish, which a plain fold cannot express. The pinned
+  * dimension is left as it is, an empty trigger leaves the view as it
+  * was, and stored facts are never rescanned. Two eager
+  * localCheckpoints per trigger (counting state, view) keep lineage
+  * flat across arbitrarily many triggers. A dim delta splices the
+  * groups of its changed keys against the stored counting state.
   *
   * Invariant (spec-gated): after any stream prefix, `view` equals the
   * batch [[IncrementalAgg.buildRetractableJoinView]] over the NET fact
@@ -37,7 +44,6 @@ final class RetractableViewMaintenance(spark: SparkSession,
     aggs: Seq[AggSpec], signCol: String = "_sign") extends BatchLedger {
 
   @volatile private var state: JoinView = null
-  @volatile private var noDeltas: DataFrame = null
 
   /** The published view as of the last merged trigger (None before). */
   def view: Option[DataFrame] = Option(state).map(_.view)
@@ -52,41 +58,36 @@ final class RetractableViewMaintenance(spark: SparkSession,
   def merge(signedDeltas: DataFrame, batchId: Long = -1L): Unit =
       synchronized {
     if (alreadyApplied(batchId)) return
-    if (state == null) {
-      noDeltas = signedDeltas.limit(0).localCheckpoint(eager = true)
-      // an empty base: the first trigger IS the first delta batch
-      state = checkpointed(IncrementalAgg.buildRetractableJoinView(
+    // the first trigger folds into an empty base over the pinned dim
+    val base = Option(state).getOrElse(
+      IncrementalAgg.buildRetractableJoinView(
         signedDeltas.limit(0).drop(signCol), dim0, joinKeys, groupCols,
-        aggs))
-    }
-    if (!signedDeltas.isEmpty) {
-      state = checkpointed(IncrementalAgg.refreshRetractableJoinView(
-        state, signedDeltas,
-        state.dim.limit(0).withColumn("op", lit("U")),
-        joinKeys, groupCols, aggs, signCol))
-    }
+        aggs).copy(dim = dim0.localCheckpoint(eager = true)))
+    val keyAgg2 = IncrementalAgg.refreshCounting(base.keyAgg,
+      signedDeltas, joinKeys, aggs, signCol).localCheckpoint(eager = true)
+    val jv = IncrementalAgg.spliceRefresh(base, keyAgg2,
+      Some(signedDeltas.select(joinKeys.map(col): _*)), None, joinKeys,
+      groupCols, aggs, counting = true)
+    state = jv.copy(view = jv.view.localCheckpoint(eager = true))
     recordApplied(batchId)
   }
 
   /** Apply a dimension changelog (dim columns + `op`, at most one row
     * per key) between triggers — affected groups recompute from the
-    * folded counting state, no fact rescan, no stream replay.
+    * stored counting state, which stays as it is — no fact rescan, no
+    * stream replay.
     */
   def applyDimDelta(changes: DataFrame): Unit = synchronized {
     require(state != null, "fold at least one trigger before dim deltas")
-    state = checkpointed(IncrementalAgg.refreshRetractableJoinView(
-      state, noDeltas, changes, joinKeys, groupCols, aggs, signCol))
+    val jv = IncrementalAgg.spliceRefresh(state, state.keyAgg, None,
+      Some(changes), joinKeys, groupCols, aggs, counting = true)
+    state = jv.copy(dim = jv.dim.localCheckpoint(eager = true),
+      view = jv.view.localCheckpoint(eager = true))
   }
 
-  private def checkpointed(jv: JoinView): JoinView =
-    JoinView(jv.keyAgg.localCheckpoint(eager = true),
-      jv.dim.localCheckpoint(eager = true),
-      jv.view.localCheckpoint(eager = true))
-
-  /** Persist the full maintenance state — the JoinView triple plus the
-    * (empty) delta schema — so a restarted job
-    * [[RetractableViewMaintenance.resume]]s mid-changelog with no
-    * stored-fact rescan. Call between triggers.
+  /** Persist the full maintenance state — the JoinView triple — so a
+    * restarted job [[RetractableViewMaintenance.resume]]s mid-changelog
+    * with no stored-fact rescan. Call between triggers.
     */
   def save(path: String): Unit = synchronized {
     require(state != null, "fold at least one trigger before saving")
@@ -94,7 +95,6 @@ final class RetractableViewMaintenance(spark: SparkSession,
       state.keyAgg.write.mode("overwrite").parquet(s"$dir/keyAgg")
       state.dim.write.mode("overwrite").parquet(s"$dir/dim")
       state.view.write.mode("overwrite").parquet(s"$dir/view")
-      noDeltas.write.mode("overwrite").parquet(s"$dir/deltaSchema")
       BatchLedger.save(spark, dir, lastAppliedBatch)
     }
   }
@@ -130,8 +130,6 @@ object RetractableViewMaintenance {
       spark.read.parquet(s"$dir/keyAgg").localCheckpoint(eager = true),
       dim,
       spark.read.parquet(s"$dir/view").localCheckpoint(eager = true))
-    h.noDeltas = spark.read.parquet(s"$dir/deltaSchema")
-      .localCheckpoint(eager = true)
     h.restoreLedger(BatchLedger.load(spark, dir))
     h
   }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.operators.IncrementalAgg
 import graft.operators.IncrementalAgg.{AggSpec, JoinView}
@@ -15,11 +14,18 @@ import graft.operators.IncrementalAgg.{AggSpec, JoinView}
   * State is the [[IncrementalAgg.JoinView]] triple — the key-grain fact
   * sub-aggregate (bounded by distinct join keys, the same size a
   * shuffled join's build side would be), the current dimension, and the
-  * view. Per-trigger work is the trigger's own key-grain aggregate plus
-  * the affected-group splice; stored facts are never rescanned (the
-  * IncrementalAggSpec file proof). Kept behind a localCheckpoint per
-  * merge so lineage stays flat across arbitrarily many triggers — the
-  * iterative-loop discipline.
+  * view. A trigger reads its facts once: they aggregate to join-key
+  * grain and are pinned, then [[IncrementalAgg.foldJoinView]] folds that
+  * delta into the key-grain state and, joined to the dimension, into
+  * the view. The dimension is static between dim deltas and sum/count/
+  * min/max are self-decomposable, so a fact trigger needs no
+  * affected-group splice and leaves the pinned dimension as it is. An
+  * empty trigger folds to identical rows. Three eager localCheckpoints
+  * per trigger (delta, key state, view) keep lineage flat across
+  * arbitrarily many triggers — the iterative-loop discipline — and
+  * stored facts are never rescanned (the IncrementalAggSpec file proof).
+  * A dim delta splices only the groups its changed keys belonged to or
+  * now belong to, re-derived from the stored key-grain state.
   *
   * Invariant (spec-gated): after any stream prefix, `view` equals the
   * batch `buildJoinView` over every fact seen so far against the
@@ -33,9 +39,6 @@ final class ViewMaintenance(spark: SparkSession, dim0: DataFrame,
     extends BatchLedger {
 
   @volatile private var state: JoinView = null
-  // empty frame with the FACT schema, captured at the first trigger so
-  // dim-delta refreshes can pass a typed empty fact delta
-  @volatile private var noFacts: DataFrame = null
 
   /** The published view as of the last merged trigger (None before). */
   def view: Option[DataFrame] = Option(state).map(_.view)
@@ -49,38 +52,35 @@ final class ViewMaintenance(spark: SparkSession, dim0: DataFrame,
     */
   def merge(facts: DataFrame, batchId: Long = -1L): Unit = synchronized {
     if (alreadyApplied(batchId)) return
-    if (state == null) {
-      noFacts = facts.limit(0).localCheckpoint(eager = true)
-      state = checkpointed(IncrementalAgg.buildJoinView(facts, dim0,
-        joinKeys, groupCols, aggs))
-    } else if (!facts.isEmpty) {
-      state = checkpointed(IncrementalAgg.refreshJoinView(state, facts,
-        state.dim.limit(0).withColumn("op", lit("U")),
-        joinKeys, groupCols, aggs))
-    }
+    // the first trigger folds into an empty base over the pinned dim
+    val base = Option(state).getOrElse(IncrementalAgg.buildJoinView(
+      facts.limit(0), dim0, joinKeys, groupCols, aggs)
+      .copy(dim = dim0.localCheckpoint(eager = true)))
+    val delta = IncrementalAgg.aggregate(facts, joinKeys, aggs)
+      .localCheckpoint(eager = true)
+    val jv = IncrementalAgg.foldJoinView(base, delta, joinKeys, groupCols,
+      aggs)
+    state = jv.copy(keyAgg = jv.keyAgg.localCheckpoint(eager = true),
+      view = jv.view.localCheckpoint(eager = true))
     recordApplied(batchId)
   }
 
   /** Apply a dimension changelog (dim columns + `op`, at most one row
     * per key, 'U' upsert / 'D' delete) between triggers: the affected
-    * groups recompute from the folded key-grain partials — no fact
-    * rescan, no stream replay.
+    * groups recompute from the stored key-grain partials, which stay as
+    * they are — no fact rescan, no stream replay.
     */
   def applyDimDelta(changes: DataFrame): Unit = synchronized {
     require(state != null, "fold at least one trigger before dim deltas")
-    state = checkpointed(IncrementalAgg.refreshJoinView(state, noFacts,
-      changes, joinKeys, groupCols, aggs))
+    val jv = IncrementalAgg.spliceRefresh(state, state.keyAgg, None,
+      Some(changes), joinKeys, groupCols, aggs, counting = false)
+    state = jv.copy(dim = jv.dim.localCheckpoint(eager = true),
+      view = jv.view.localCheckpoint(eager = true))
   }
 
-  private def checkpointed(jv: JoinView): JoinView =
-    JoinView(jv.keyAgg.localCheckpoint(eager = true),
-      jv.dim.localCheckpoint(eager = true),
-      jv.view.localCheckpoint(eager = true))
-
-  /** Persist the full maintenance state — the JoinView triple plus the
-    * (empty) fact schema — so a restarted job
-    * [[ViewMaintenance.resume]]s mid-stream with no stored-fact rescan
-    * and no stream replay. Call between triggers.
+  /** Persist the full maintenance state — the JoinView triple — so a
+    * restarted job [[ViewMaintenance.resume]]s mid-stream with no
+    * stored-fact rescan and no stream replay. Call between triggers.
     */
   def save(path: String): Unit = synchronized {
     require(state != null, "fold at least one trigger before saving")
@@ -88,7 +88,6 @@ final class ViewMaintenance(spark: SparkSession, dim0: DataFrame,
       state.keyAgg.write.mode("overwrite").parquet(s"$dir/keyAgg")
       state.dim.write.mode("overwrite").parquet(s"$dir/dim")
       state.view.write.mode("overwrite").parquet(s"$dir/view")
-      noFacts.write.mode("overwrite").parquet(s"$dir/factSchema")
       BatchLedger.save(spark, dir, lastAppliedBatch)
     }
   }
@@ -115,17 +114,12 @@ object ViewMaintenance {
     val dir = Snapshots.resolve(spark, path)
     // eager localCheckpoints cut lineage to the snapshot files, so a
     // later save() to the SAME path is not an overwrite-what-you-read
-    // (merge re-checkpoints the triple but never noFacts — without this,
-    // a resumed handle that saves before a dim delta truncates the
-    // factSchema parquet its own plan reads)
     val dim = spark.read.parquet(s"$dir/dim").localCheckpoint(eager = true)
     val h = new ViewMaintenance(spark, dim, joinKeys, groupCols, aggs)
     h.state = JoinView(
       spark.read.parquet(s"$dir/keyAgg").localCheckpoint(eager = true),
       dim,
       spark.read.parquet(s"$dir/view").localCheckpoint(eager = true))
-    h.noFacts = spark.read.parquet(s"$dir/factSchema")
-      .localCheckpoint(eager = true)
     h.restoreLedger(BatchLedger.load(spark, dir))
     h
   }

@@ -315,9 +315,9 @@ class RestartFleetSpec extends SparkSpec {
     assert(rows(h2.index) === rows(want.index),
       "save-after-resume round-trip diverged")
 
-    // join view: the triple + factSchema all re-save to the path they
-    // were just loaded from (factSchema is the round-13-found hazard —
-    // merge never re-checkpoints it)
+    // join view: the triple re-saves to the path it was just loaded from
+    // (the dim is the hazard — merge keeps it pinned as loaded, never
+    // re-checkpointing it)
     val keys = Seq("k"); val groups = Seq("g")
     val aggs = Seq(AggSpec("v", "sum", "v_sum"))
     val dim0 = (0L to 9L).map(k => (k, s"g${k % 3}")).toDF("k", "g")
@@ -328,7 +328,7 @@ class RestartFleetSpec extends SparkSpec {
     val vm1 = ViewMaintenance.resume(spark, vdir, keys, groups, aggs)
     vm1.save(vdir)
     val vm2 = ViewMaintenance.resume(spark, vdir, keys, groups, aggs)
-    // and the factSchema survives to type an immediate dim delta
+    // and an immediate dim delta splices against the re-saved state
     vm2.applyDimDelta(Seq((0L, "gX", "U")).toDF("k", "g", "op"))
     assert(rows(vm2.view.get) === rows({
       val w = new ViewMaintenance(spark, dim0, keys, groups, aggs)
