@@ -117,12 +117,21 @@ object IncrementalAgg {
   /** Fold SIGNED fact deltas into an [[aggregateCounting]] state:
     * `deltas` carries the fact columns plus `signCol` (+1 insert, −1
     * retract; an update is the −old/+new pair). One delta-grain
-    * aggregate + one state-grain merge — stored facts never rescanned,
-    * groups retracted to zero rows vanish.
+    * aggregate ([[aggregateSigned]]) + one state-grain merge
+    * ([[foldCounting]]) — stored facts never rescanned, groups retracted
+    * to zero rows vanish.
     */
   def refreshCounting(stored: DataFrame, deltas: DataFrame,
       keys: Seq[String], aggs: Seq[AggSpec],
-      signCol: String = "_sign"): DataFrame = {
+      signCol: String = "_sign"): DataFrame =
+    foldCounting(stored, aggregateSigned(deltas, keys, aggs, signCol), keys)
+
+  /** Signed `keys`-grain aggregate of fact deltas, in the column layout
+    * of an [[aggregateCounting]] state: each measure, count and witness
+    * is a signed sum, `_rows` the net multiplicity.
+    */
+  def aggregateSigned(deltas: DataFrame, keys: Seq[String],
+      aggs: Seq[AggSpec], signCol: String = "_sign"): DataFrame = {
     require(aggs.forall(a => a.fn == "sum" || a.fn == "count"),
       "counting-algebra IVM supports invertible aggregates only (sum/count)")
     val sgn = col(signCol).cast("long")
@@ -134,12 +143,17 @@ object IncrementalAgg {
     } ++ aggs.collect { case AggSpec(in, "sum", out) =>
       sum(when(col(in).isNotNull, sgn).otherwise(0L)).as(s"__cnt_$out")
     } :+ sum(sgn).as("_rows")
-    val deltaAgg = deltas.groupBy(keys.map(col): _*)
-      .agg(deltaExprs.head, deltaExprs.tail: _*)
-    val outs = stored.columns.filterNot(keys.contains)
-    val merged = outs.map(c => sum(col(c)).as(c))
-    stored.select(stored.columns.map(col).toIndexedSeq: _*)
-      .unionByName(deltaAgg.select(stored.columns.map(col).toIndexedSeq: _*))
+    deltas.groupBy(keys.map(col): _*).agg(deltaExprs.head, deltaExprs.tail: _*)
+  }
+
+  /** Sum an [[aggregateSigned]] delta into a counting state per `keys`,
+    * dropping keys retracted to zero rows.
+    */
+  def foldCounting(stored: DataFrame, deltaAgg: DataFrame,
+      keys: Seq[String]): DataFrame = {
+    val cols = stored.columns.map(col).toIndexedSeq
+    val merged = stored.columns.filterNot(keys.contains).map(c => sum(col(c)).as(c))
+    stored.select(cols: _*).unionByName(deltaAgg.select(cols: _*))
       .groupBy(keys.map(col): _*).agg(merged.head, merged.tail: _*)
       .filter(col("_rows") > 0L)
   }

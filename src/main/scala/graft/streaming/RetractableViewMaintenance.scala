@@ -20,16 +20,18 @@ import graft.operators.IncrementalAgg.{AggSpec, JoinView}
   * multiplicity + per-sum non-null witnesses): keys retracted to zero
   * rows vanish, a group whose last non-null measure is retracted
   * publishes SUM = NULL, and groups losing every key drop out of the
-  * view — full-recompute parity after any trigger. A trigger folds its
-  * signed key-grain aggregate into the counting state and pins the
-  * result once; the affected-group splice then re-derives the groups of
-  * the trigger's keys from that pinned state, so the view's checkpoint
-  * never recomputes the fold. The splice stays because a retraction can
-  * make a group vanish, which a plain fold cannot express. The pinned
-  * dimension is left as it is, an empty trigger leaves the view as it
-  * was, and stored facts are never rescanned. Two eager
-  * localCheckpoints per trigger (counting state, view) keep lineage
-  * flat across arbitrarily many triggers. A dim delta splices the
+  * view — full-recompute parity after any trigger. A trigger reads its
+  * batch once, into a pinned signed key-grain aggregate, folds that
+  * into the counting state and pins the result; the affected-group
+  * splice then takes the trigger's keys from the pinned aggregate and
+  * re-derives their groups from the pinned state, so neither the splice
+  * nor the view's checkpoint re-reads the batch or recomputes the fold.
+  * The splice stays because a retraction can make a group vanish, which
+  * a plain fold cannot express. The pinned dimension is left as it is,
+  * an empty trigger leaves the view as it was, and stored facts are
+  * never rescanned. Three eager localCheckpoints per trigger (signed
+  * aggregate, counting state, view) keep lineage flat across
+  * arbitrarily many triggers. A dim delta splices the
   * groups of its changed keys against the stored counting state.
   *
   * Invariant (spec-gated): after any stream prefix, `view` equals the
@@ -63,10 +65,14 @@ final class RetractableViewMaintenance(spark: SparkSession,
       IncrementalAgg.buildRetractableJoinView(
         signedDeltas.limit(0).drop(signCol), dim0, joinKeys, groupCols,
         aggs).copy(dim = dim0.localCheckpoint(eager = true)))
-    val keyAgg2 = IncrementalAgg.refreshCounting(base.keyAgg,
-      signedDeltas, joinKeys, aggs, signCol).localCheckpoint(eager = true)
+    // the batch is read once, into its pinned signed key-grain
+    // aggregate; the fold and the splice's touched keys both read that
+    val delta = IncrementalAgg.aggregateSigned(signedDeltas, joinKeys, aggs,
+      signCol).localCheckpoint(eager = true)
+    val keyAgg2 = IncrementalAgg.foldCounting(base.keyAgg, delta, joinKeys)
+      .localCheckpoint(eager = true)
     val jv = IncrementalAgg.spliceRefresh(base, keyAgg2,
-      Some(signedDeltas.select(joinKeys.map(col): _*)), None, joinKeys,
+      Some(delta.select(joinKeys.map(col): _*)), None, joinKeys,
       groupCols, aggs, counting = true)
     state = jv.copy(view = jv.view.localCheckpoint(eager = true))
     recordApplied(batchId)
