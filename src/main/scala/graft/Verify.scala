@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.sources.Tables
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the DuckDB compare (`tools/check.py`), and
@@ -38,7 +39,7 @@ object Verify {
           .parquet(s"$outDir/$name")
         val w = wall
         System.err.println(f"[verify] $name ok in $w%.1fs")
-        Record(name, w, Some(spark.read.parquet(s"$outDir/$name").count()), None)
+        Record(name, w, Some(Tables.parquet(spark, s"$outDir/$name").count()), None)
       }
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

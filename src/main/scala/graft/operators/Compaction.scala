@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
+import graft.sources.Tables
 
 /** Small-file compaction: rewrite a parquet dataset into ~target-size
   * files. The classic 100 TB operational problem — streaming sinks and
@@ -49,7 +50,7 @@ object Compaction {
     val files = dataFiles(inDir)
     val bytes = files.map(_.length).sum
     val bins = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    spark.read.parquet(inDir)
+    Tables.parquet(spark, inDir)
       .repartition(bins)
       .write.mode(SaveMode.Overwrite).parquet(outDir)
     Stats(files.size, bytes, dataFiles(outDir).size)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.IncrementalAgg.AggSpec
+import graft.sources.Tables
 
 /** The crawl-intake decontamination pipeline, composed end-to-end from
   * the standing kernels: build a prefix-filter near-dup index and a
@@ -69,7 +70,7 @@ object Decontam {
   def loadIntake(spark: org.apache.spark.sql.SparkSession,
       path: String): IntakeState =
     IntakeState(SetSimJoin.loadJaccardIndex(spark, s"$path/index"),
-      spark.read.parquet(s"$path/stats"))
+      Tables.parquet(spark, s"$path/stats"))
 
   /** Decontaminate one fresh batch against the standing state: probe,
     * split, admit. `batch` must carry `idCol`, `tokensCol`, and the

@@ -216,6 +216,12 @@ object Dedup {
     * is small enough that one round-robin exchange is ~free relative to
     * the kernel; at real scale the scan already fans out and this is a
     * no-op (unknown-size sources estimate huge and are left alone).
+    *
+    * The gate is priced by optimizing `df`'s plan on the driver
+    * (`optimizedPlan.stats`), once per call. The current callers pass
+    * scan-rooted frames (a projection or filter over a table), where
+    * that pass is cheap; a deep input pays a full Catalyst optimization
+    * of its subtree here, before the returned frame is planned again.
     */
   private[graft] def fanOut(df: DataFrame): DataFrame = {
     val spark = df.sparkSession

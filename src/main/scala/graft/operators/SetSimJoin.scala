@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.sources.Tables
 
 /** EXACT set-similarity self-join: every pair with Jaccard(A,B) >=
   * tNum/tDen, without the cross product — the prefix-filtering family
@@ -314,10 +315,10 @@ object SetSimJoin {
   /** Read back a [[JaccardIndex.save]]d index. */
   def loadJaccardIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): JaccardIndex = {
-    val meta = spark.read.parquet(s"$path/meta").head()
-    JaccardIndex(spark.read.parquet(s"$path/vocab"),
+    val meta = Tables.parquet(spark, s"$path/meta").head()
+    JaccardIndex(Tables.parquet(spark, s"$path/vocab"),
       meta.getAs[Long]("ceiling"),
-      spark.read.parquet(s"$path/postings"),
+      Tables.parquet(spark, s"$path/postings"),
       meta.getAs[scala.collection.Seq[Long]]("hot").toSeq
         .zip(meta.getAs[scala.collection.Seq[Long]]("hot_counts")),
       meta.getAs[Int]("t_num"), meta.getAs[Int]("t_den"))
@@ -432,10 +433,10 @@ object SetSimJoin {
   /** Read back a [[ContainmentIndex.save]]d index. */
   def loadContainmentIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): ContainmentIndex = {
-    val meta = spark.read.parquet(s"$path/meta").head()
-    ContainmentIndex(spark.read.parquet(s"$path/vocab"),
+    val meta = Tables.parquet(spark, s"$path/meta").head()
+    ContainmentIndex(Tables.parquet(spark, s"$path/vocab"),
       meta.getAs[Long]("ceiling"),
-      spark.read.parquet(s"$path/postings"),
+      Tables.parquet(spark, s"$path/postings"),
       meta.getAs[scala.collection.Seq[Long]]("hot").toSeq
         .zip(meta.getAs[scala.collection.Seq[Long]]("hot_counts")),
       meta.getAs[Int]("t_num"), meta.getAs[Int]("t_den"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.VectorOps
+import graft.sources.Tables
 
 /** Similarity search over an embedding column (`ArrayType(FloatType)`).
   *
@@ -114,7 +115,7 @@ object Similarity {
     * listing, partition discovery, parquet footer schema) is built once
     * per (session, path) and reused across executions — the LookupJoin
     * cache posture applied to the scan side. Per-execution
-    * `spark.read.parquet(path)` re-derives the partition spec and
+    * `Tables.parquet(spark, path)` re-derives the partition spec and
     * re-reads a footer on the driver every run, a fixed driver-side cost
     * that at the 1000× replica is pure scheduling-floor tax on a probe
     * that reads 5 buckets (measured: PROFILE ss1b_parts, r17). Safe
@@ -125,7 +126,7 @@ object Similarity {
     */
   def layoutRelation(s: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
-    relationCache.computeIfAbsent((s, path), _ => s.read.parquet(path))
+    relationCache.computeIfAbsent((s, path), _ => Tables.parquet(s, path))
 
   private val relationCache = new java.util.concurrent.ConcurrentHashMap[
     (org.apache.spark.sql.SparkSession, String), DataFrame]()

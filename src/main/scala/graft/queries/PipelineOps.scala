@@ -1198,7 +1198,7 @@ object PipelineOps {
           .join(r2.admitted.groupBy("lang")
             .agg(count(lit(1)).as("n_adm_b2")), Seq("lang"), "full")
         IncrementalAgg.publishCounting(r2.stats, statKeys, statAggs)
-          .join(s.read.parquet(s"$path/census"), Seq("lang"), "left")
+          .join(Tables.parquet(s, s"$path/census"), Seq("lang"), "left")
           .join(c2, Seq("lang"), "left")
           .select(col("lang"), col("n_docs"), col("chars_sum"),
             coalesce(col("n_adm_b1"), lit(0L)).as("n_adm_b1"),

@@ -1,8 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -23,10 +21,10 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   *   - plain `INT64` with no annotation — a raw epoch tick column; by
   *     the events-table contract those ticks are nanoseconds.
   *
-  * The sniff is one footer HEAD-read per dataset (same pass
-  * [[graft.operators.LayoutStats]] does for clustering proofs), zero
-  * data I/O, and — unlike probing `spark.read.parquet(...).schema` —
-  * works without mutating session configuration first.
+  * The sniff reads the footer [[Tables.parquet]] resolves the schema
+  * from (one footer per dataset, zero data I/O) and — unlike probing a
+  * resolved frame's schema — works without mutating session
+  * configuration first.
   */
 object TsLayout {
 
@@ -40,32 +38,29 @@ object TsLayout {
     * directory of part files). Columns absent from the footer — or a
     * non-INT64 physical type — report [[Native]]: nothing to convert.
     */
-  def unitOf(spark: SparkSession, path: String, column: String = "ts"): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new Path(path)
-    val file = firstDataFile(p.getFileSystem(conf), p).getOrElse(
-      throw new graft.GraftException(s"no parquet data file under $path"))
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-    try {
-      import scala.jdk.CollectionConverters._
-      val schema = reader.getFooter.getFileMetaData.getSchema
-      val field = schema.getFields.asScala.collectFirst {
-        case t if t.getName.equalsIgnoreCase(column) && t.isPrimitive =>
-          t.asPrimitiveType()
-      }
-      field match {
-        case Some(f) if f.getPrimitiveTypeName ==
-            org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64 =>
-          f.getLogicalTypeAnnotation match {
-            case t: TimestampLogicalTypeAnnotation
-              if t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS => Nanos
-            case t: TimestampLogicalTypeAnnotation => Native
-            case null => Nanos // unannotated INT64: epoch-nanos by contract
-            case _ => Native
-          }
-        case _ => Native
-      }
-    } finally reader.close()
+  def unitOf(spark: SparkSession, path: String, column: String = "ts"): Unit =
+    unitIn(Tables.footer(spark, path).getOrElse(
+      throw new graft.GraftException(s"no parquet data file under $path")), column)
+
+  private def unitIn(footer: Footer, column: String): Unit = {
+    import scala.jdk.CollectionConverters._
+    val schema = footer.getParquetMetadata.getFileMetaData.getSchema
+    val field = schema.getFields.asScala.collectFirst {
+      case t if t.getName.equalsIgnoreCase(column) && t.isPrimitive =>
+        t.asPrimitiveType()
+    }
+    field match {
+      case Some(f) if f.getPrimitiveTypeName ==
+          org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64 =>
+        f.getLogicalTypeAnnotation match {
+          case t: TimestampLogicalTypeAnnotation
+            if t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS => Nanos
+          case t: TimestampLogicalTypeAnnotation => Native
+          case null => Nanos // unannotated INT64: epoch-nanos by contract
+          case _ => Native
+        }
+      case _ => Native
+    }
   }
 
   /** Batch-read `path` with the right reader flags for its layout —
@@ -73,12 +68,14 @@ object TsLayout {
     * conf Spark provides no per-read handle for; set lazily, ONLY when a
     * NANOS file is actually in front of us, never unconditionally).
     * `ts` arrives as raw nanos `LongType` (NANOS layout) or a native
-    * timestamp — callers normalize via [[normalizeTs]].
+    * timestamp — callers normalize via [[normalizeTs]]. The unit comes
+    * from the footer the schema is resolved from, so one footer is read.
     */
   def readRaw(spark: SparkSession, path: String): DataFrame = {
-    if (unitOf(spark, path) == Nanos)
+    val footer = Tables.footer(spark, path)
+    if (footer.exists(unitIn(_, "ts") == Nanos))
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(path)
+    Tables.resolve(spark, path, footer)
   }
 
   /** Canonicalize an events frame's `ts` to the engine's internal form,
@@ -110,13 +107,4 @@ object TsLayout {
         unix_micros(col("ts").cast(TimestampType)) * 1000L)
       case None => df
     }
-
-  private def firstDataFile(fs: FileSystem, p: Path): Option[Path] = {
-    val st = fs.getFileStatus(p)
-    if (st.isFile) Some(p)
-    else fs.listStatus(p).sortBy(_.getPath.getName).collectFirst {
-      case s if s.isFile && !s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith(".") && s.getLen > 0 => s.getPath
-    }
-  }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
+import graft.sources.Tables
 
 /** Streaming ANN-INDEX maintenance — the standing-pipeline form of
   * [[Similarity.ensureLshBucketLayout]] under continuous arrival: an
@@ -145,7 +146,7 @@ final class AnnIndexMaintenance(spark: SparkSession, path: String,
   def index: DataFrame = {
     require(fs.exists(layout),
       s"no layout at $path — merge at least one trigger first")
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
   }
 
   /** Exact-cosine top-k over the hamming-`probeHamming` bucket ball of

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.lit
+import graft.sources.Tables
 
 /** Per-handle BATCH LEDGER for the foreachBatch maintenance fleet: each
   * handle records the highest stream batchId it has folded, persists it
@@ -85,7 +86,7 @@ private[streaming] object BatchLedger {
   def load(spark: SparkSession, path: String): Long = {
     val p = new Path(s"$path/ledger")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.parquet(p.toString).head().getLong(0)
+    if (fs.exists(p)) Tables.parquet(spark, p.toString).head().getLong(0)
     else -1L
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType, StringType, StructField, StructType}
 
 import graft.operators.Dedup
+import graft.sources.Tables
 
 /** Streaming content-defined-chunk dedup — the standing-pipeline form
   * of the dd21 batch query: a document stream folds into a chunk-
@@ -122,7 +123,7 @@ object ChunkMaintenance {
     val h = new ChunkMaintenance(spark)
     // eager localCheckpoint cuts lineage to the snapshot files, so a
     // later save() to the SAME path is not an overwrite-what-you-read
-    h.state = spark.read.parquet(s"$dir/index")
+    h.state = Tables.parquet(spark, s"$dir/index")
       .localCheckpoint(eager = true)
     h.restoreLedger(BatchLedger.load(spark, dir))
     h

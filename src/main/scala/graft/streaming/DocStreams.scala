@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.Dedup
+import graft.sources.Tables
 
 /** A bucket's accumulated members: parallel arrays of (doc id,
   * normalized-enough text to re-shingle). Top-level case class so Spark
@@ -336,7 +337,7 @@ object ClusterMaintenance {
     val h = new ClusterMaintenance(spark)
     // eager localCheckpoint cuts lineage to the snapshot files, so a
     // later save() to the SAME path is not an overwrite-what-you-read
-    h.current = spark.read.parquet(s"$dir/labels")
+    h.current = Tables.parquet(spark, s"$dir/labels")
       .localCheckpoint(eager = true)
     h.restoreLedger(BatchLedger.load(spark, dir))
     h

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.operators.ProtoPrune
+import graft.sources.Tables
 
 /** Streaming prototype-model maintenance — the standing-pipeline form
   * of the imp7 prune: an embedding stream folds into the per-cluster
@@ -93,7 +94,7 @@ object EmbedMaintenance {
     val h = new EmbedMaintenance(spark)
     // eager localCheckpoint cuts lineage to the snapshot files, so a
     // later save() to the SAME path is not an overwrite-what-you-read
-    h.state = spark.read.parquet(s"$dir/componentState")
+    h.state = Tables.parquet(spark, s"$dir/componentState")
       .localCheckpoint(eager = true)
     h.restoreLedger(BatchLedger.load(spark, dir))
     h

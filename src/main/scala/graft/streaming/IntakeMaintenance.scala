@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{Decontam, IncrementalAgg}
 import graft.operators.IncrementalAgg.AggSpec
+import graft.sources.Tables
 
 /** Streaming decontamination intake — the standing-pipeline form of
   * cur12: the corpus index and stats state are built ONCE at
@@ -130,7 +131,7 @@ object IntakeMaintenance {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val census =
       if (fs.exists(censusPath))
-        Some(spark.read.parquet(s"$dir/census").localCheckpoint(eager = true))
+        Some(Tables.parquet(spark, s"$dir/census").localCheckpoint(eager = true))
       else None
     val h = new IntakeMaintenance(spark, st, census, idCol, tokensCol,
       statKeys, statAggs)

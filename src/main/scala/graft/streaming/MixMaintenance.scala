@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.operators.{Mixing, TextAnalysis}
+import graft.sources.Tables
 
 /** Streaming MIX maintenance — the standing-pipeline form of the
   * cur9 UniMax allocation: a document stream folds into per-source
@@ -36,17 +37,17 @@ final class MixMaintenance(spark: SparkSession) extends BatchLedger {
     */
   def merge(docs: DataFrame, batchId: Long = -1L): Unit = synchronized {
     if (alreadyApplied(batchId)) return
+    // no emptiness probe: an empty batch folds to the same rows, and the
+    // fold's one checkpoint is the only action a trigger pays
     val delta = docs.groupBy("source")
       .agg(sum(TextAnalysis.tokenCount(col("text"))).as("tok"))
-    if (!delta.isEmpty) {
-      val l = state.select(col("source"), col("tok").as("tok_a"))
-      val r = delta.select(col("source"), col("tok").as("tok_d"))
-      state = l.join(r, Seq("source"), "fullouter")
-        .select(col("source"),
-          (coalesce(col("tok_a"), lit(0L)) + coalesce(col("tok_d"), lit(0L)))
-            .as("tok"))
-        .localCheckpoint(eager = true)
-    }
+    val l = state.select(col("source"), col("tok").as("tok_a"))
+    val r = delta.select(col("source"), col("tok").as("tok_d"))
+    state = l.join(r, Seq("source"), "fullouter")
+      .select(col("source"),
+        (coalesce(col("tok_a"), lit(0L)) + coalesce(col("tok_d"), lit(0L)))
+          .as("tok"))
+      .localCheckpoint(eager = true)
     recordApplied(batchId)
   }
 
@@ -87,7 +88,7 @@ object MixMaintenance {
     val h = new MixMaintenance(spark)
     // eager localCheckpoint cuts lineage to the snapshot files, so a
     // later save() to the SAME path is not an overwrite-what-you-read
-    h.state = spark.read.parquet(s"$dir/tokenCounts")
+    h.state = Tables.parquet(spark, s"$dir/tokenCounts")
       .localCheckpoint(eager = true)
     h.restoreLedger(BatchLedger.load(spark, dir))
     h

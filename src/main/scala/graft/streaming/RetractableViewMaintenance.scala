@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.IncrementalAgg
 import graft.operators.IncrementalAgg.{AggSpec, JoinView}
+import graft.sources.Tables
 
 /** Streaming RETRACTION-capable view maintenance — the standing form of
   * inc5, completing the maintenance family: [[ViewMaintenance]] takes
@@ -129,13 +130,13 @@ object RetractableViewMaintenance {
     val dir = Snapshots.resolve(spark, path)
     // eager localCheckpoints cut lineage to the snapshot files, so a
     // later save() to the SAME path is not an overwrite-what-you-read
-    val dim = spark.read.parquet(s"$dir/dim").localCheckpoint(eager = true)
+    val dim = Tables.parquet(spark, s"$dir/dim").localCheckpoint(eager = true)
     val h = new RetractableViewMaintenance(spark, dim, joinKeys,
       groupCols, aggs, signCol)
     h.state = JoinView(
-      spark.read.parquet(s"$dir/keyAgg").localCheckpoint(eager = true),
+      Tables.parquet(spark, s"$dir/keyAgg").localCheckpoint(eager = true),
       dim,
-      spark.read.parquet(s"$dir/view").localCheckpoint(eager = true))
+      Tables.parquet(spark, s"$dir/view").localCheckpoint(eager = true))
     h.restoreLedger(BatchLedger.load(spark, dir))
     h
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.IncrementalAgg
 import graft.operators.IncrementalAgg.AggSpec
+import graft.sources.Tables
 
 /** Streaming RETRACTION-capable view maintenance — the standing form of
   * inc4's counting algebra, i.e. a CDC changelog stream (not an
@@ -91,7 +92,7 @@ object RetractionMaintenance {
     val h = new RetractionMaintenance(spark, keys, aggs, signCol)
     // eager localCheckpoint cuts lineage to the snapshot files, so a
     // later save() to the SAME path is not an overwrite-what-you-read
-    h.state = spark.read.parquet(s"$dir/countingState")
+    h.state = Tables.parquet(spark, s"$dir/countingState")
       .localCheckpoint(eager = true)
     h.restoreLedger(BatchLedger.load(spark, dir))
     h

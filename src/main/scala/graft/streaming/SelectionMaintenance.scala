@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.operators.DsirSelection
+import graft.sources.Tables
 
 /** Streaming DSIR maintenance — the standing-pipeline form of the
   * imp1/imp2 selection queries: a document stream folds into the
@@ -98,7 +99,7 @@ object SelectionMaintenance {
     val h = new SelectionMaintenance(spark)
     // eager localCheckpoint cuts lineage to the snapshot files, so a
     // later save() to the SAME path is not an overwrite-what-you-read
-    h.state = spark.read.parquet(s"$dir/bucketCounts")
+    h.state = Tables.parquet(spark, s"$dir/bucketCounts")
       .localCheckpoint(eager = true)
     h.restoreLedger(BatchLedger.load(spark, dir))
     h

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 import graft.operators.IncrementalAgg
 import graft.operators.IncrementalAgg.{AggSpec, JoinView}
+import graft.sources.Tables
 
 /** Streaming materialized-view maintenance — the standing-pipeline form
   * of the inc1/inc2/inc3 batch refreshes: a fact stream folds into a
@@ -114,12 +115,12 @@ object ViewMaintenance {
     val dir = Snapshots.resolve(spark, path)
     // eager localCheckpoints cut lineage to the snapshot files, so a
     // later save() to the SAME path is not an overwrite-what-you-read
-    val dim = spark.read.parquet(s"$dir/dim").localCheckpoint(eager = true)
+    val dim = Tables.parquet(spark, s"$dir/dim").localCheckpoint(eager = true)
     val h = new ViewMaintenance(spark, dim, joinKeys, groupCols, aggs)
     h.state = JoinView(
-      spark.read.parquet(s"$dir/keyAgg").localCheckpoint(eager = true),
+      Tables.parquet(spark, s"$dir/keyAgg").localCheckpoint(eager = true),
       dim,
-      spark.read.parquet(s"$dir/view").localCheckpoint(eager = true))
+      Tables.parquet(spark, s"$dir/view").localCheckpoint(eager = true))
     h.restoreLedger(BatchLedger.load(spark, dir))
     h
   }

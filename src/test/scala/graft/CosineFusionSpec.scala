@@ -9,11 +9,14 @@ import graft.functions.VectorOps
 class CosineFusionSpec extends SparkSpec {
   import spark.implicits._
 
-  private lazy val df = Seq(
+  // RDD-backed fixtures: over a local relation the optimizer evaluates
+  // the kernels on the driver with interpreted `eval`, and the generated
+  // code would never run
+  private lazy val df = spark.sparkContext.parallelize(Seq(
     (1L, Array(1.0f, 2.0f, 3.0f), Array(3.0f, 2.0f, 1.0f)),
     (2L, Array(0.0f, 0.0f, 0.0f), Array(1.0f, 1.0f, 1.0f)),
     (3L, Array(1.5f, -2.0f, 0.5f), Array(1.5f, -2.0f, 0.5f))
-  ).toDF("id", "a", "b")
+  ), 2).toDF("id", "a", "b")
 
   test("composed cosine is fused to graft_cosine in the optimized plan") {
     // parquet-backed input so ConvertToLocalRelation can't pre-evaluate
@@ -35,11 +38,11 @@ class CosineFusionSpec extends SparkSpec {
   }
 
   test("native kernel matches composed semantics on null elements and length mismatch") {
-    val weird = Seq(
+    val weird = spark.sparkContext.parallelize(Seq(
       (1L, Array[java.lang.Float](1.0f, null, 3.0f), Array[java.lang.Float](1.0f, 2.0f, 3.0f)),
       (2L, Array[java.lang.Float](1.0f, 2.0f), Array[java.lang.Float](1.0f, 2.0f, 3.0f)),
       (3L, Array[java.lang.Float](1.0f, 2.0f, 3.0f), Array[java.lang.Float](1.0f, 2.0f, 3.0f))
-    ).toDF("id", "a", "b")
+    ), 2).toDF("id", "a", "b")
     val native = weird.select(col("id"), VectorOps.cosineNative(col("a"), col("b")).as("c"))
       .collect().map(r => r.getLong(0) -> r.get(1)).toMap
     val composed = weird.select(col("id"), VectorOps.cosine(col("a"), col("b")).as("c"))

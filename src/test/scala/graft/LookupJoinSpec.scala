@@ -12,12 +12,19 @@ import graft.operators.LookupJoin
 class LookupJoinSpec extends SparkSpec {
   import spark.implicits._
 
+  /** An RDD-backed fact frame: over a local relation the optimizer would
+    * evaluate the lookup expression on the driver with interpreted
+    * `eval`, and the generated code would never run.
+    */
+  private def facts[T: org.apache.spark.sql.Encoder: scala.reflect.ClassTag](keys: T*) =
+    spark.createDataset(spark.sparkContext.parallelize(keys, 2)).toDF("fk")
+
   test("lookup inner == join inner, incl. misses and NULL fact keys") {
     LookupJoin.reset()
     val side = Seq((10L, 1L), (20L, 2L), (30L, 3L),
       (Long.MinValue, 9L)).toDF("k", "p") // sentinel-valued real key
-    val fact = Seq(Some(10L), Some(20L), Some(99L), None,
-      Some(Long.MinValue)).toDF("fk")
+    val fact = facts(Some(10L), Some(20L), Some(99L), None,
+      Some(Long.MinValue))
     val got = LookupJoin.inner(fact, col("fk"), side, "k", "p", "p")
       .collect().map(_.toSeq).toSet
     val want = fact.join(side, col("fk") === col("k"))
@@ -43,7 +50,7 @@ class LookupJoinSpec extends SparkSpec {
   test("duplicate side keys and NULL payloads are refused loudly") {
     LookupJoin.reset()
     val dup = Seq((1L, 1L), (1L, 2L)).toDF("k", "p")
-    val fact = Seq(1L).toDF("fk")
+    val fact = facts(1L)
     assertThrows[GraftInvalidOperation] {
       LookupJoin.inner(fact, col("fk"), dup, "k", "p", "p").count()
     }
@@ -127,8 +134,8 @@ class LookupJoinSpec extends SparkSpec {
     LookupJoin.reset()
     val side = Seq((10L, 1L, 100L), (20L, 2L, 200L),
       (Long.MinValue, 9L, 900L)).toDF("k", "p", "q")
-    val fact = Seq(Some(10L), Some(20L), Some(99L), None,
-      Some(Long.MinValue)).toDF("fk")
+    val fact = facts(Some(10L), Some(20L), Some(99L), None,
+      Some(Long.MinValue))
     val got = LookupJoin.inner(fact, col("fk"), side, "k",
         Seq("p" -> "p", "q" -> "q"))
       .collect().map(_.toSeq).toSet
@@ -151,7 +158,7 @@ class LookupJoinSpec extends SparkSpec {
   test("arity-2 refusal semantics match arity-1: duplicate keys and a " +
       "NULL in EITHER payload field throw") {
     LookupJoin.reset()
-    val fact = Seq(1L).toDF("fk")
+    val fact = facts(1L)
     val dup = Seq((1L, 1L, 1L), (1L, 2L, 2L)).toDF("k", "p", "q")
     assertThrows[GraftInvalidOperation] {
       LookupJoin.inner(fact, col("fk"), dup, "k",
@@ -226,8 +233,8 @@ class LookupJoinSpec extends SparkSpec {
     val side = Seq((10L, "alice", 1L), (20L, "bob", 2L),
       (30L, "alice", 3L), (Long.MinValue, "carol", 9L))
       .toDF("k", "name", "p")
-    val fact = Seq(Some(10L), Some(20L), Some(30L), Some(99L), None,
-      Some(Long.MinValue)).toDF("fk")
+    val fact = facts(Some(10L), Some(20L), Some(30L), Some(99L), None,
+      Some(Long.MinValue))
     val got = LookupJoin.inner(fact, col("fk"), side, "k",
         Seq("name" -> "name", "p" -> "p"))
       .collect().map(_.toSeq).toSet
@@ -249,7 +256,7 @@ class LookupJoinSpec extends SparkSpec {
 
   test("string payloads: NULL strings are refused like NULL longs") {
     LookupJoin.reset()
-    val fact = Seq(1L).toDF("fk")
+    val fact = facts(1L)
     val nullStr = Seq((1L, Some("x")), (2L, Option.empty[String]))
       .toDF("k", "name")
     assertThrows[GraftInvalidOperation] {

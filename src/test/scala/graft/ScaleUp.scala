@@ -17,10 +17,15 @@ import graft.sources.Tables
 object ScaleUp {
   def main(args: Array[String]): Unit = {
     val Array(src, dst, kStr) = args
-    val k = kStr.toInt
     val spark = GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    run(spark, src, dst, kStr.toInt)
+    println(s"SCALEUP done: $dst = $src x $kStr")
+    spark.stop()
+  }
 
+  /** Write the `k`-fold replica of every table under `src` to `dst`. */
+  def run(spark: SparkSession, src: String, dst: String, k: Int): Unit = {
     def maxOf(df: DataFrame, c: String): Long =
       df.agg(max(col(c))).head().getLong(0) + 1
 
@@ -91,7 +96,5 @@ object ScaleUp {
     val ev = Tables.load(spark, src, "events")
     val nEv = maxOf(ev, "event_id")
     write(replicate(ev, Map("event_id" -> nEv, "user_id" -> nC)), "events")
-    println(s"SCALEUP done: $dst = $src x $k")
-    spark.stop()
   }
 }

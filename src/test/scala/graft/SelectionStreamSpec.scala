@@ -14,6 +14,10 @@ import graft.streaming.SelectionMaintenance
 class SelectionStreamSpec extends SparkSpec {
   import spark.implicits._
 
+  // a mix merge is its fold's eager checkpoint: two shuffle stages and
+  // the result stage (4 jobs with the emptiness probe it used to run)
+  private val MaxMixMergeJobs = 3
+
   private def corpus() = Tables.load(spark, sf, "documents")
     .select(col("doc_id"), col("source"), col("text"))
     .as[(Long, String, String)].collect().toSeq.sortBy(_._1)
@@ -65,6 +69,28 @@ class SelectionStreamSpec extends SparkSpec {
         "streamed UniMax allocation diverged from batch cur9")
       assert(streamed.nonEmpty)
     } finally q.stop()
+  }
+
+  test("mix merge: each batch is one fold; an empty batch keeps the totals") {
+    val docs = Tables.load(spark, sf, "documents")
+      .select(col("doc_id"), col("source"), col("text"))
+    val empty = docs.filter(col("doc_id") < 0L)
+    def totals(mm: graft.streaming.MixMaintenance) =
+      mm.tokenCounts.collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    val fresh = new graft.streaming.MixMaintenance(spark)
+    fresh.merge(empty)
+    assert(totals(fresh).isEmpty)
+    fresh.merge(docs)
+    val mm = new graft.streaming.MixMaintenance(spark)
+    mm.merge(docs.filter(col("doc_id") % 2 === 0L))
+    val half = ActionProbe(spark)(mm.merge(docs.filter(col("doc_id") % 2 === 1L)))
+    val before = totals(mm)
+    assert(before.nonEmpty && before === totals(fresh))
+    val none = ActionProbe(spark)(mm.merge(empty))
+    info(s"merge: ${half.jobs} jobs; empty merge: ${none.jobs} jobs")
+    assert(totals(mm) === before, "an empty batch changed the totals")
+    assert(half.jobs <= MaxMixMergeJobs, s"merge ran ${half.jobs} jobs")
+    assert(none.jobs <= MaxMixMergeJobs, s"empty merge ran ${none.jobs} jobs")
   }
 
   test("selection maintenance is micro-batching invariant (1 vs 5 batches)") {

@@ -14,11 +14,20 @@ import graft.functions.SqlCast
 class SqlCastSpec extends SparkSpec {
   import org.apache.spark.sql.Row
 
+  /** The cast of one cell, run whole-stage-codegen'd and interpreted
+    * over an RDD-backed frame (a local relation would be folded on the
+    * driver by interpreted `eval`); both must agree.
+    */
   private def one[T](from: DataType, to: DataType, v: Any): Any = {
     val df = spark.createDataFrame(
-      java.util.List.of(Row(v)),
+      spark.sparkContext.parallelize(Seq(Row(v)), 1),
       StructType(Seq(StructField("a", from, nullable = true))))
-    df.select(SqlCast.to(col("a"), from, to).as("r")).head().get(0)
+    val q = df.select(SqlCast.to(col("a"), from, to).as("r"))
+    val Seq(generated, interpreted) = modes.map { case (_, confs) =>
+      withConfs(confs)(q.collect().head.get(0)) }
+    assert(bits(generated) === bits(interpreted),
+      s"codegen and interpreted casts of $v disagree")
+    generated
   }
 
   test("bool source: to int/float/bool/str (suite:1205-1257)") {

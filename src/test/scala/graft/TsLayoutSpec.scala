@@ -165,10 +165,10 @@ class TsLayoutSpec extends SparkSpec {
     assert(all.distinct.size === 1, "layouts disagree on the windowed aggregate")
   }
 
-  test("TIMESTAMP(MILLIS) legacy layout: classified Native, loads quantized-to-ms") {
-    // legacy writers (Spark's TIMESTAMP_MILLIS output mode, older Hive)
-    // annotate MILLIS; the sniff must NOT treat it as raw nanos, and the
-    // load path lands on the native-timestamp branch (ms-quantized values)
+  /** Legacy TIMESTAMP(MILLIS) layout: Spark's TIMESTAMP_MILLIS output
+    * mode, as older Hive writers produce it.
+    */
+  private lazy val millisDir: String = {
     val stage = s"$work/millis_stage"
     val dir = new java.io.File(s"$work/millis"); dir.mkdirs()
     // outputTimestampType is a session conf, not a write option
@@ -189,9 +189,16 @@ class TsLayoutSpec extends SparkSpec {
     java.nio.file.Files.move(part.toPath,
       new java.io.File(dir, "events.parquet").toPath,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    dir.toString
+  }
 
+  test("TIMESTAMP(MILLIS) legacy layout: classified Native, loads quantized-to-ms") {
+    // legacy writers (Spark's TIMESTAMP_MILLIS output mode, older Hive)
+    // annotate MILLIS; the sniff must NOT treat it as raw nanos, and the
+    // load path lands on the native-timestamp branch (ms-quantized values)
+    val dir = millisDir
     assert(TsLayout.unitOf(spark, s"$dir/events.parquet") === TsLayout.Native)
-    val df = Tables.load(spark, dir.toString, "events")
+    val df = Tables.load(spark, dir, "events")
     assert(df.schema("ts").dataType === TimestampNTZType)
     val got = df.select(col("event_id"),
         unix_micros(col("ts").cast("timestamp")).as("us"))
@@ -217,5 +224,25 @@ class TsLayoutSpec extends SparkSpec {
     sets.foreach { case (name, got) =>
       assert(got === expected, s"layout $name wire adapter diverges")
     }
+  }
+
+  test("Tables.parquet resolves every layout to the schema Spark infers") {
+    val nanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+    val saved = spark.conf.getOption(nanosAsLong)
+    val files = (layouts + ("millis" -> millisDir)).map { case (n, d) =>
+      n -> s"$d/events.parquet" }
+    try {
+      for (flag <- Seq("true", "false"); (name, f) <- files) {
+        spark.conf.set(nanosAsLong, flag)
+        // the schema, or the class of the error resolving it
+        def outcome(df: => DataFrame) =
+          scala.util.Try(df.schema).toEither.left.map(_.getClass)
+        val inferred = outcome(spark.read.parquet(f))
+        assert(outcome(Tables.parquet(spark, f)) === inferred,
+          s"$name with nanosAsLong=$flag")
+        // without the flag, both refuse a NANOS column
+        assert(inferred.isLeft === (name == "nanos" && flag == "false"))
+      }
+    } finally saved.fold(spark.conf.unset(nanosAsLong))(spark.conf.set(nanosAsLong, _))
   }
 }

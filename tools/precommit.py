@@ -15,10 +15,13 @@ single command so there is no excuse to skip it.
 2. registry reachability — every graft.queries.*Ops object defining
    `all: Seq[Q]` must be referenced from SparkEntry.scala (round 9 also
    shipped SelectionOps unregistered → dead code, never gated)
-3. with query names: run graft.Verify on exactly those rows @ sf0.01 and
+3. parquet reads — `read.parquet(` appears in src/main only inside
+   `graft.sources.Tables.parquet`; any other call brings back Spark's
+   one-task schema-inference job on every table resolution
+4. with query names: run graft.Verify on exactly those rows @ sf0.01 and
    tools/check.py on the dump (the driver-gate stand-in for the rows you
    just touched)
-4. staleness report — README's counts-block HEAD vs the current HEAD, so
+5. staleness report — README's counts-block HEAD vs the current HEAD, so
    a post-snapshot commit visibly admits its artifacts are stale
 
 Exit code is non-zero on any red step; the staleness report is a warning
@@ -61,6 +64,28 @@ def check_registry_reachability():
     print("[precommit] registry reachability ok", flush=True)
 
 
+PARQUET_READ = re.compile(r"\bread\s*\.\s*parquet\s*\(")
+PARQUET_HELPER = "src/main/scala/graft/sources/Tables.scala"
+
+
+def check_parquet_reads():
+    """Every parquet read in src/main resolves through Tables.parquet,
+    which reads the schema from one footer on the driver; a bare
+    `spark.read.parquet(` runs a schema-inference Spark job per call."""
+    hits = []
+    for f in sorted((REPO / "src/main").rglob("*.scala")):
+        rel = f.relative_to(REPO).as_posix()
+        text = f.read_text()
+        found = [f"{rel}:{text.count(chr(10), 0, m.start()) + 1}"
+                 for m in PARQUET_READ.finditer(text)]
+        # the helper keeps one: Spark's own inference, its fallback
+        hits += found[1:] if rel == PARQUET_HELPER else found
+    if hits:
+        raise SystemExit("[precommit] RED — read.parquet( outside "
+                         f"Tables.parquet (use graft.sources.Tables.parquet): {hits}")
+    print("[precommit] parquet reads ok", flush=True)
+
+
 def staleness_report():
     head = subprocess.run(["git", "rev-parse", "--short", "HEAD"], cwd=REPO,
                           capture_output=True, text=True).stdout.strip()
@@ -77,6 +102,7 @@ def main():
     names = sys.argv[1:]
     run("sbt compile", ["sbt", "-batch", "compile", "Test/compile"])
     check_registry_reachability()
+    check_parquet_reads()
     if names:
         subprocess.run(["rm", "-rf", OUT], check=True)
         run(f"verify {len(names)} touched rows @ sf0.01",
