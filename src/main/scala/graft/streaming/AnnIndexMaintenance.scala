@@ -205,6 +205,5 @@ final class AnnIndexMaintenance(spark: SparkSession, path: String,
     */
   def attach(emb: DataFrame)
       : org.apache.spark.sql.streaming.DataStreamWriter[Row] =
-    emb.writeStream.outputMode("append")
-      .foreachBatch { (b: DataFrame, id: Long) => merge(b, id) }
+    Maintenance.attach(emb)(merge(_, _))
 }

@@ -1,27 +1,26 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.lit
-import graft.sources.Tables
-
 /** Per-handle BATCH LEDGER for the foreachBatch maintenance fleet: each
   * handle records the highest stream batchId it has folded, persists it
-  * alongside the state in [[save]]/[[load]], and skips a re-delivered
-  * id — so under Spark's own checkpointLocation restart (batchIds are
-  * monotone across restarts and the in-flight trigger is REPLAYED with
-  * its original id) the replay is a no-op instead of a double-count,
-  * and a snapshot is self-describing about which stream prefix it
-  * covers (the [[AnnIndexMaintenance]] commit-log idea, at
+  * alongside the state (a one-row `ledger` piece), and skips a
+  * re-delivered id — so under Spark's own checkpointLocation restart
+  * (batchIds are monotone across restarts and the in-flight trigger is
+  * REPLAYED with its original id) the replay is a no-op instead of a
+  * double-count, and a snapshot is self-describing about which stream
+  * prefix it covers (the [[AnnIndexMaintenance]] commit-log idea, at
   * driver-state grain).
+  *
+  * [[Maintenance]] is the single owner of the ledger: its `merge` guards
+  * and records, its `save` persists, `Maintenance.resume` restores, and
+  * its `attach` feeds each trigger's batchId in.
   *
   * Contract: ledger-guarded `merge(df, batchId)` applies a batch iff
   * `batchId` exceeds the last applied id (foreachBatch delivers ids in
   * order; a replayed id is ≤), and records it only AFTER the fold
   * succeeds — a failed fold leaves the ledger untouched, so the retry
-  * is not skipped. `batchId < 0` (and the legacy `merge(df)` overloads)
-  * bypass the ledger for ad-hoc/batch use and for callers that re-drive
-  * a suffix through a FRESH source whose ids restart at 0. The two
+  * is not skipped. `batchId < 0` (the `merge(df)` default) bypasses
+  * the ledger for ad-hoc/batch use and for callers that re-drive a
+  * suffix through a FRESH source whose ids restart at 0. The two
   * restart postures this supports:
   *
   *   - Spark checkpointLocation (production): resume the handle, point
@@ -68,25 +67,4 @@ trait BatchLedger {
 
   /** Restore the ledger from a loaded snapshot (resume()). */
   private[streaming] def restoreLedger(batchId: Long): Unit = last = batchId
-}
-
-private[streaming] object BatchLedger {
-
-  /** Persist the ledger next to the handle's state (one-row parquet —
-    * same transport as the state, so it lands wherever the state does).
-    */
-  def save(spark: SparkSession, path: String, lastApplied: Long): Unit =
-    spark.range(1).select(lit(lastApplied).as("last_batch_id"))
-      .write.mode("overwrite").parquet(s"$path/ledger")
-
-  /** The persisted ledger, or −1 for a snapshot that predates it (the
-    * pre-ledger snapshots carried no coverage record — exactly the
-    * self-description gap this closes).
-    */
-  def load(spark: SparkSession, path: String): Long = {
-    val p = new Path(s"$path/ledger")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Tables.parquet(spark, p.toString).head().getLong(0)
-    else -1L
-  }
 }

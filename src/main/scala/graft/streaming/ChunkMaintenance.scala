@@ -1,11 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DecimalType, LongType}
 
 import graft.operators.Dedup
-import graft.sources.Tables
 
 /** Streaming content-defined-chunk dedup — the standing-pipeline form
   * of the dd21 batch query: a document stream folds into a chunk-
@@ -30,26 +29,20 @@ import graft.sources.Tables
   * the same information however arrival was batched. (dd21's PER-SOURCE
   * split needs occurrence-grain retro-labeling and stays batch-only.)
   */
-final class ChunkMaintenance(spark: SparkSession) extends BatchLedger {
+final class ChunkMaintenance(spark: SparkSession) extends Maintenance(spark) {
 
-  @volatile private var state: DataFrame = spark.createDataFrame(
-    java.util.Collections.emptyList[Row](),
-    StructType(Seq(
-      StructField("fp", StringType, nullable = false),
-      StructField("first_rank", DecimalType(38, 0), nullable = false),
-      StructField("copies", LongType, nullable = false),
-      StructField("chunk_len", LongType, nullable = false))))
+  @volatile private var state: DataFrame = emptyState("fp STRING NOT NULL, " +
+    "first_rank DECIMAL(38,0) NOT NULL, copies BIGINT NOT NULL, " +
+    "chunk_len BIGINT NOT NULL")
 
   /** The chunk-fingerprint index as of the last merged trigger. */
   def index: DataFrame = state
 
-  /** foreachBatch body — fold one trigger's documents (doc_id, text)
-    * into the index. A non-negative `batchId` rides the [[BatchLedger]]:
-    * a replayed trigger (Spark's at-least-once checkpoint contract) is a
-    * no-op instead of a double-count; −1 folds unconditionally.
+  /** Fold one trigger's documents (doc_id, text) into the index. No
+    * emptiness probe: an empty delta re-aggregates the index to the same
+    * rows, and a probe would chunk the batch a second time.
     */
-  def merge(docs: DataFrame, batchId: Long = -1L): Unit = synchronized {
-    if (alreadyApplied(batchId)) return
+  protected def fold(docs: DataFrame): Unit = {
     val delta = Dedup.contentDefinedChunks(
         docs.select(col("doc_id"), col("text")), "doc_id", "text")
       .select(md5(col("chunk")).as("fp"),
@@ -62,16 +55,13 @@ final class ChunkMaintenance(spark: SparkSession) extends BatchLedger {
       .groupBy("fp")
       .agg(min(col("grank")).as("first_rank"),
         count(lit(1)).as("copies"), min(col("chunk_len")).as("chunk_len"))
-    if (!delta.isEmpty) {
-      state = state.select("fp", "first_rank", "copies", "chunk_len")
-        .unionByName(delta.select("fp", "first_rank", "copies", "chunk_len"))
-        .groupBy("fp")
-        .agg(min(col("first_rank")).as("first_rank"),
-          sum(col("copies")).as("copies"),
-          min(col("chunk_len")).as("chunk_len"))
-        .localCheckpoint(eager = true)
-    }
-    recordApplied(batchId)
+    state = state.select("fp", "first_rank", "copies", "chunk_len")
+      .unionByName(delta.select("fp", "first_rank", "copies", "chunk_len"))
+      .groupBy("fp")
+      .agg(min(col("first_rank")).as("first_rank"),
+        sum(col("copies")).as("copies"),
+        min(col("chunk_len")).as("chunk_len"))
+      .localCheckpoint(eager = true)
   }
 
   /** Corpus-level dedup statistics from the index — one 1-row frame
@@ -87,45 +77,15 @@ final class ChunkMaintenance(spark: SparkSession) extends BatchLedger {
       coalesce(sum((col("copies") - 1L) * col("chunk_len")), lit(0L))
         .as("dup_bytes"))
 
-  /** Persist the chunk-fingerprint index so a restarted job
-    * [[ChunkMaintenance.resume]]s without replaying the consumed stream
-    * prefix. Call between triggers (foreachBatch serializes against
-    * merge). The merge algebra (min first_rank, sum copies) is
-    * associative/commutative, so a resumed fold lands byte-identical to
-    * the uninterrupted run — the spec-gated restart invariant.
-    */
-  def save(path: String): Unit = synchronized {
-    Snapshots.publish(spark, path) { dir =>
-      state.write.mode("overwrite").parquet(s"$dir/index")
-      BatchLedger.save(spark, dir, lastAppliedBatch)
-    }
-  }
-
-  /** Wire a streaming document frame into this handle; `.start()` to
-    * run. The trigger's batchId rides the ledger, so a checkpoint-driven
-    * replay after restart is a no-op.
-    */
-  def attach(docs: DataFrame)
-      : org.apache.spark.sql.streaming.DataStreamWriter[Row] =
-    docs.writeStream.outputMode("append")
-      .foreachBatch { (b: DataFrame, id: Long) => merge(b, id) }
+  protected def pieces: Seq[(String, DataFrame)] = Seq("index" -> state)
 }
 
 object ChunkMaintenance {
-
-  /** Reconstruct a [[ChunkMaintenance.save]]d handle in a fresh job:
-    * the index loads from parquet and the stream continues where the
-    * killed one stopped (restart parity is spec-gated at multiple kill
-    * points in RestartRecoverySpec).
-    */
-  def resume(spark: SparkSession, path: String): ChunkMaintenance = {
-    val dir = Snapshots.resolve(spark, path)
-    val h = new ChunkMaintenance(spark)
-    // eager localCheckpoint cuts lineage to the snapshot files, so a
-    // later save() to the SAME path is not an overwrite-what-you-read
-    h.state = Tables.parquet(spark, s"$dir/index")
-      .localCheckpoint(eager = true)
-    h.restoreLedger(BatchLedger.load(spark, dir))
-    h
-  }
+  /** Resume a saved handle: no streamed document is re-read. */
+  def resume(spark: SparkSession, path: String): ChunkMaintenance =
+    Maintenance.resume(spark, path) { s =>
+      val h = new ChunkMaintenance(spark)
+      h.state = s("index")
+      h
+    }
 }

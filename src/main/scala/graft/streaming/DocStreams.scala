@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.Dedup
-import graft.sources.Tables
 
 /** A bucket's accumulated members: parallel arrays of (doc id,
   * normalized-enough text to re-shingle). Top-level case class so Spark
@@ -276,70 +275,36 @@ object DocStreams {
   * deployment keeps the identical merge result in a transactional table
   * so concurrent readers see atomic label versions.
   */
-final class ClusterMaintenance(spark: SparkSession) extends BatchLedger {
-  import org.apache.spark.sql.Row
-  import org.apache.spark.sql.types.{LongType, StructField, StructType}
+final class ClusterMaintenance(spark: SparkSession)
+    extends Maintenance(spark) {
 
-  @volatile private var current: DataFrame = spark.createDataFrame(
-    java.util.Collections.emptyList[Row](),
-    StructType(Seq(StructField("id", LongType, nullable = false),
-      StructField("cluster", LongType, nullable = false))))
+  @volatile private var current: DataFrame =
+    emptyState("id BIGINT NOT NULL, cluster BIGINT NOT NULL")
 
   /** The labeling after every merged trigger: (id, cluster = min member). */
   def labels: DataFrame = current
 
-  /** foreachBatch body — merge one trigger's pairs into the labeling.
-    * A non-negative `batchId` rides the [[BatchLedger]]: a checkpoint-
-    * replayed trigger is a no-op; −1 folds unconditionally.
+  /** Merge one trigger's pairs into the labeling. The distinct pairs are
+    * pinned, so the contraction reads the batch once; no emptiness
+    * probe, since no pair touches no cluster and the labels stay as
+    * they are.
     */
-  def merge(pairs: DataFrame, batchId: Long = -1L): Unit = synchronized {
-    if (alreadyApplied(batchId)) return
+  protected def fold(pairs: DataFrame): Unit = {
     val p = pairs.select(col("ida"), col("idb")).distinct()
-    if (!p.isEmpty) {
-      current = Dedup.incrementalComponents(current, p)
-        .localCheckpoint(eager = true)
-    }
-    recordApplied(batchId)
+      .localCheckpoint(eager = true)
+    current = Dedup.incrementalComponents(current, p)
+      .localCheckpoint(eager = true)
   }
 
-  /** Persist the label table so a restarted job
-    * [[ClusterMaintenance.resume]]s without replaying the consumed pair
-    * stream — incremental contraction re-derives only from the labeling
-    * plus new pairs, so the resumed fold reaches the same components as
-    * uninterrupted (spec-gated; labels are min-member canonical, hence
-    * batching-invariant). Call between triggers.
-    */
-  def save(path: String): Unit = synchronized {
-    Snapshots.publish(spark, path) { dir =>
-      current.write.mode("overwrite").parquet(s"$dir/labels")
-      BatchLedger.save(spark, dir, lastAppliedBatch)
-    }
-  }
-
-  /** Wire a pair stream into this handle; `.start()` to run. The
-    * trigger's batchId rides the ledger, so a checkpoint-driven replay
-    * after restart is a no-op.
-    */
-  def attach(pairs: Dataset[NearDupPair])
-      : org.apache.spark.sql.streaming.DataStreamWriter[NearDupPair] =
-    pairs.writeStream.outputMode("append")
-      .foreachBatch { (b: Dataset[NearDupPair], id: Long) => merge(b.toDF(), id) }
+  protected def pieces: Seq[(String, DataFrame)] = Seq("labels" -> current)
 }
 
 object ClusterMaintenance {
-
-  /** Reconstruct a [[ClusterMaintenance.save]]d handle in a fresh job —
-    * the label table loads from parquet; the pair prefix consumed
-    * before the kill is never replayed.
-    */
-  def resume(spark: SparkSession, path: String): ClusterMaintenance = {
-    val dir = Snapshots.resolve(spark, path)
-    val h = new ClusterMaintenance(spark)
-    // eager localCheckpoint cuts lineage to the snapshot files, so a
-    // later save() to the SAME path is not an overwrite-what-you-read
-    h.current = Tables.parquet(spark, s"$dir/labels")
-      .localCheckpoint(eager = true)
-    h.restoreLedger(BatchLedger.load(spark, dir))
-    h
-  }
+  /** Resume a saved handle: the consumed pair prefix is not replayed. */
+  def resume(spark: SparkSession, path: String): ClusterMaintenance =
+    Maintenance.resume(spark, path) { s =>
+      val h = new ClusterMaintenance(spark)
+      h.current = s("labels")
+      h
+    }
 }

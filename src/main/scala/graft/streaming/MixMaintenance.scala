@@ -1,11 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.operators.{Mixing, TextAnalysis}
-import graft.sources.Tables
 
 /** Streaming MIX maintenance — the standing-pipeline form of the
   * cur9 UniMax allocation: a document stream folds into per-source
@@ -21,22 +19,16 @@ import graft.sources.Tables
   * micro-batched (spec-gated, with allocation parity against the batch
   * cur9 query).
   */
-final class MixMaintenance(spark: SparkSession) extends BatchLedger {
+final class MixMaintenance(spark: SparkSession) extends Maintenance(spark) {
 
-  @volatile private var state: DataFrame = spark.createDataFrame(
-    java.util.Collections.emptyList[Row](),
-    StructType(Seq(StructField("source", StringType, nullable = true),
-      StructField("tok", LongType, nullable = false))))
+  @volatile private var state: DataFrame =
+    emptyState("source STRING, tok BIGINT NOT NULL")
 
   /** Per-source token totals as of the last merged trigger. */
   def tokenCounts: DataFrame = state
 
-  /** foreachBatch body — fold one trigger's documents into the totals.
-    * A non-negative `batchId` rides the [[BatchLedger]]: a checkpoint-
-    * replayed trigger is a no-op; −1 folds unconditionally.
-    */
-  def merge(docs: DataFrame, batchId: Long = -1L): Unit = synchronized {
-    if (alreadyApplied(batchId)) return
+  /** Fold one trigger's documents into the totals. */
+  protected def fold(docs: DataFrame): Unit = {
     // no emptiness probe: an empty batch folds to the same rows, and the
     // fold's one checkpoint is the only action a trigger pays
     val delta = docs.groupBy("source")
@@ -48,49 +40,21 @@ final class MixMaintenance(spark: SparkSession) extends BatchLedger {
         (coalesce(col("tok_a"), lit(0L)) + coalesce(col("tok_d"), lit(0L)))
           .as("tok"))
       .localCheckpoint(eager = true)
-    recordApplied(batchId)
   }
 
   /** UniMax allocation over the current totals (cur9 semantics). */
   def unimaxAlloc(budgetNum: Int = 7, budgetDen: Int = 10): DataFrame =
     Mixing.unimaxAlloc(state, budgetNum, budgetDen)
 
-  /** Persist the per-source totals so a restarted job
-    * [[MixMaintenance.resume]]s without replaying the consumed stream
-    * prefix — token-count addition is associative/commutative, so the
-    * resumed fold is byte-identical to uninterrupted (spec-gated).
-    * Call between triggers.
-    */
-  def save(path: String): Unit = synchronized {
-    Snapshots.publish(spark, path) { dir =>
-      state.write.mode("overwrite").parquet(s"$dir/tokenCounts")
-      BatchLedger.save(spark, dir, lastAppliedBatch)
-    }
-  }
-
-  /** Wire a streaming document frame into this handle; `.start()` to
-    * run. The trigger's batchId rides the ledger, so a checkpoint-driven
-    * replay after restart is a no-op.
-    */
-  def attach(docs: DataFrame)
-      : org.apache.spark.sql.streaming.DataStreamWriter[Row] =
-    docs.writeStream.outputMode("append")
-      .foreachBatch { (b: DataFrame, id: Long) => merge(b, id) }
+  protected def pieces: Seq[(String, DataFrame)] = Seq("tokenCounts" -> state)
 }
 
 object MixMaintenance {
-
-  /** Reconstruct a [[MixMaintenance.save]]d handle in a fresh job — the
-    * totals load from parquet; no streamed document is re-read.
-    */
-  def resume(spark: SparkSession, path: String): MixMaintenance = {
-    val dir = Snapshots.resolve(spark, path)
-    val h = new MixMaintenance(spark)
-    // eager localCheckpoint cuts lineage to the snapshot files, so a
-    // later save() to the SAME path is not an overwrite-what-you-read
-    h.state = Tables.parquet(spark, s"$dir/tokenCounts")
-      .localCheckpoint(eager = true)
-    h.restoreLedger(BatchLedger.load(spark, dir))
-    h
-  }
+  /** Resume a saved handle: no streamed document is re-read. */
+  def resume(spark: SparkSession, path: String): MixMaintenance =
+    Maintenance.resume(spark, path) { s =>
+      val h = new MixMaintenance(spark)
+      h.state = s("tokenCounts")
+      h
+    }
 }

@@ -1,11 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.IncrementalAgg
 import graft.operators.IncrementalAgg.{AggSpec, JoinView}
-import graft.sources.Tables
 
 /** Streaming RETRACTION-capable view maintenance — the standing form of
   * inc5, completing the maintenance family: [[ViewMaintenance]] takes
@@ -44,7 +43,8 @@ import graft.sources.Tables
   */
 final class RetractableViewMaintenance(spark: SparkSession,
     dim0: DataFrame, joinKeys: Seq[String], groupCols: Seq[String],
-    aggs: Seq[AggSpec], signCol: String = "_sign") extends BatchLedger {
+    aggs: Seq[AggSpec], signCol: String = "_sign")
+    extends Maintenance(spark) {
 
   @volatile private var state: JoinView = null
 
@@ -54,13 +54,8 @@ final class RetractableViewMaintenance(spark: SparkSession,
   /** The counting key-grain state (inspection / persistence). */
   def keyAgg: Option[DataFrame] = Option(state).map(_.keyAgg)
 
-  /** foreachBatch body — fold one trigger's SIGNED fact deltas. A
-    * non-negative `batchId` rides the [[BatchLedger]]: a checkpoint-
-    * replayed trigger is a no-op; −1 folds unconditionally.
-    */
-  def merge(signedDeltas: DataFrame, batchId: Long = -1L): Unit =
-      synchronized {
-    if (alreadyApplied(batchId)) return
+  /** Fold one trigger's SIGNED fact deltas. */
+  protected def fold(signedDeltas: DataFrame): Unit = {
     // the first trigger folds into an empty base over the pinned dim
     val base = Option(state).getOrElse(
       IncrementalAgg.buildRetractableJoinView(
@@ -76,7 +71,6 @@ final class RetractableViewMaintenance(spark: SparkSession,
       Some(delta.select(joinKeys.map(col): _*)), None, joinKeys,
       groupCols, aggs, counting = true)
     state = jv.copy(view = jv.view.localCheckpoint(eager = true))
-    recordApplied(batchId)
   }
 
   /** Apply a dimension changelog (dim columns + `op`, at most one row
@@ -92,52 +86,20 @@ final class RetractableViewMaintenance(spark: SparkSession,
       view = jv.view.localCheckpoint(eager = true))
   }
 
-  /** Persist the full maintenance state — the JoinView triple — so a
-    * restarted job [[RetractableViewMaintenance.resume]]s mid-changelog
-    * with no stored-fact rescan. Call between triggers.
-    */
-  def save(path: String): Unit = synchronized {
-    require(state != null, "fold at least one trigger before saving")
-    Snapshots.publish(spark, path) { dir =>
-      state.keyAgg.write.mode("overwrite").parquet(s"$dir/keyAgg")
-      state.dim.write.mode("overwrite").parquet(s"$dir/dim")
-      state.view.write.mode("overwrite").parquet(s"$dir/view")
-      BatchLedger.save(spark, dir, lastAppliedBatch)
-    }
-  }
-
-  /** Wire a streaming signed changelog into this handle. The trigger's
-    * batchId rides the ledger, so a checkpoint-driven replay after
-    * restart is a no-op.
-    */
-  def attach(signedDeltas: DataFrame)
-      : org.apache.spark.sql.streaming.DataStreamWriter[Row] =
-    signedDeltas.writeStream.outputMode("append")
-      .foreachBatch { (b: DataFrame, id: Long) => merge(b, id) }
+  protected def pieces: Seq[(String, DataFrame)] = Option(state).toSeq
+    .flatMap(s => Seq("keyAgg" -> s.keyAgg, "dim" -> s.dim, "view" -> s.view))
 }
 
 object RetractableViewMaintenance {
-
-  /** Reconstruct a [[RetractableViewMaintenance.save]]d handle in a
-    * fresh job: the counting key-grain state, the dimension as of the
-    * kill, and the published view all load from parquet — the signed
-    * changelog consumed before the kill is never replayed. Restart
-    * parity at multiple kill points is the spec-gated invariant.
-    */
+  /** Resume a saved handle: no fact rescan, no changelog replay. */
   def resume(spark: SparkSession, path: String, joinKeys: Seq[String],
       groupCols: Seq[String], aggs: Seq[AggSpec],
-      signCol: String = "_sign"): RetractableViewMaintenance = {
-    val dir = Snapshots.resolve(spark, path)
-    // eager localCheckpoints cut lineage to the snapshot files, so a
-    // later save() to the SAME path is not an overwrite-what-you-read
-    val dim = Tables.parquet(spark, s"$dir/dim").localCheckpoint(eager = true)
-    val h = new RetractableViewMaintenance(spark, dim, joinKeys,
-      groupCols, aggs, signCol)
-    h.state = JoinView(
-      Tables.parquet(spark, s"$dir/keyAgg").localCheckpoint(eager = true),
-      dim,
-      Tables.parquet(spark, s"$dir/view").localCheckpoint(eager = true))
-    h.restoreLedger(BatchLedger.load(spark, dir))
-    h
-  }
+      signCol: String = "_sign"): RetractableViewMaintenance =
+    Maintenance.resume(spark, path) { s =>
+      val dim = s("dim")
+      val h = new RetractableViewMaintenance(spark, dim, joinKeys,
+        groupCols, aggs, signCol)
+      h.state = JoinView(s("keyAgg"), dim, s("view"))
+      h
+    }
 }

@@ -1,11 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.IncrementalAgg
 import graft.operators.IncrementalAgg.AggSpec
-import graft.sources.Tables
 
 /** Streaming RETRACTION-capable view maintenance — the standing form of
   * inc4's counting algebra, i.e. a CDC changelog stream (not an
@@ -24,27 +22,21 @@ import graft.sources.Tables
   * which is exactly the out-of-order tolerance a CDC consumer needs.
   */
 final class RetractionMaintenance(spark: SparkSession, keys: Seq[String],
-    aggs: Seq[AggSpec], signCol: String = "_sign") extends BatchLedger {
+    aggs: Seq[AggSpec], signCol: String = "_sign")
+    extends Maintenance(spark) {
 
   @volatile private var state: DataFrame = null
 
-  /** foreachBatch body — fold one trigger's signed rows into the state.
-    * A non-negative `batchId` rides the [[BatchLedger]]: a checkpoint-
-    * replayed trigger is a no-op; −1 folds unconditionally.
+  /** Fold one trigger's signed rows into the state. No emptiness probe:
+    * an empty batch re-sums the state to the same rows.
     */
-  def merge(signed: DataFrame, batchId: Long = -1L): Unit = synchronized {
-    if (alreadyApplied(batchId)) return
-    if (state == null) {
-      // an empty unsigned aggregate of the batch's fact columns yields
-      // the counting-state schema to fold the first trigger into
-      state = IncrementalAgg.aggregateCounting(
-        signed.drop(signCol).limit(0), keys, aggs)
-    }
-    if (!signed.isEmpty) {
-      state = IncrementalAgg.refreshCounting(state, signed, keys, aggs,
-        signCol).localCheckpoint(eager = true)
-    }
-    recordApplied(batchId)
+  protected def fold(signed: DataFrame): Unit = {
+    // an empty unsigned aggregate of the batch's fact columns yields
+    // the counting-state schema to fold the first trigger into
+    val base = Option(state).getOrElse(IncrementalAgg.aggregateCounting(
+      signed.drop(signCol).limit(0), keys, aggs))
+    state = IncrementalAgg.refreshCounting(base, signed, keys, aggs,
+      signCol).localCheckpoint(eager = true)
   }
 
   /** The published view as of the last merged trigger (None before). */
@@ -54,47 +46,18 @@ final class RetractionMaintenance(spark: SparkSession, keys: Seq[String],
   /** The raw counting state incl. witnesses (persistence/inspection). */
   def countingState: Option[DataFrame] = Option(state)
 
-  /** Persist the counting state (with witnesses) so a restarted job
-    * [[RetractionMaintenance.resume]]s mid-changelog without replaying
-    * the consumed prefix — the signed fold is associative/commutative,
-    * so the resumed view is byte-identical to uninterrupted
-    * (spec-gated), even when a −old/+new update pair is split across
-    * the restart. Call between triggers.
-    */
-  def save(path: String): Unit = synchronized {
-    require(state != null, "fold at least one trigger before saving")
-    Snapshots.publish(spark, path) { dir =>
-      state.write.mode("overwrite").parquet(s"$dir/countingState")
-      BatchLedger.save(spark, dir, lastAppliedBatch)
-    }
-  }
-
-  /** Wire a streaming signed-changelog frame into this handle. The
-    * trigger's batchId rides the ledger, so a checkpoint-driven replay
-    * after restart is a no-op.
-    */
-  def attach(signed: DataFrame)
-      : org.apache.spark.sql.streaming.DataStreamWriter[Row] =
-    signed.writeStream.outputMode("append")
-      .foreachBatch { (b: DataFrame, id: Long) => merge(b, id) }
+  protected def pieces: Seq[(String, DataFrame)] =
+    Option(state).toSeq.map("countingState" -> _)
 }
 
 object RetractionMaintenance {
-
-  /** Reconstruct a [[RetractionMaintenance.save]]d handle in a fresh
-    * job — the counting state loads from parquet; the changelog prefix
-    * consumed before the kill is never replayed.
-    */
+  /** Resume a saved handle: the consumed changelog is not replayed. */
   def resume(spark: SparkSession, path: String, keys: Seq[String],
       aggs: Seq[AggSpec], signCol: String = "_sign")
-      : RetractionMaintenance = {
-    val dir = Snapshots.resolve(spark, path)
-    val h = new RetractionMaintenance(spark, keys, aggs, signCol)
-    // eager localCheckpoint cuts lineage to the snapshot files, so a
-    // later save() to the SAME path is not an overwrite-what-you-read
-    h.state = Tables.parquet(spark, s"$dir/countingState")
-      .localCheckpoint(eager = true)
-    h.restoreLedger(BatchLedger.load(spark, dir))
-    h
-  }
+      : RetractionMaintenance =
+    Maintenance.resume(spark, path) { s =>
+      val h = new RetractionMaintenance(spark, keys, aggs, signCol)
+      h.state = s("countingState")
+      h
+    }
 }

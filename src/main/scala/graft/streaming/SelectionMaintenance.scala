@@ -1,11 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.DsirSelection
-import graft.sources.Tables
 
 /** Streaming DSIR maintenance — the standing-pipeline form of the
   * imp1/imp2 selection queries: a document stream folds into the
@@ -29,30 +26,24 @@ import graft.sources.Tables
   * fixed probe frame through [[select]] therefore matches the batch
   * imp2 resample on the same corpus.
   */
-final class SelectionMaintenance(spark: SparkSession) extends BatchLedger {
+final class SelectionMaintenance(spark: SparkSession)
+    extends Maintenance(spark) {
 
-  @volatile private var state: DataFrame = spark.createDataFrame(
-    java.util.Collections.emptyList[Row](),
-    StructType(Seq(StructField("b", LongType, nullable = false),
-      StructField("tc", LongType, nullable = false),
-      StructField("rc", LongType, nullable = false))))
+  @volatile private var state: DataFrame =
+    emptyState("b BIGINT NOT NULL, tc BIGINT NOT NULL, rc BIGINT NOT NULL")
 
   /** The model's sufficient statistics as of the last merged trigger. */
   def bucketCounts: DataFrame = state
 
-  /** foreachBatch body — fold one trigger's documents into the model. A
-    * non-negative `batchId` rides the [[BatchLedger]]: a checkpoint-
-    * replayed trigger is a no-op; −1 folds unconditionally.
+  /** Fold one trigger's documents into the model. No emptiness probe: an
+    * empty delta merges to the same rows, and a probe would compute the
+    * delta a second time.
     */
-  def merge(docs: DataFrame, batchId: Long = -1L): Unit = synchronized {
-    if (alreadyApplied(batchId)) return
+  protected def fold(docs: DataFrame): Unit = {
     val delta = DsirSelection.bucketState(
       DsirSelection.hashedBigramCounts(docs))
-    if (!delta.isEmpty) {
-      state = DsirSelection.mergeState(state, delta)
-        .localCheckpoint(eager = true)
-    }
-    recordApplied(batchId)
+    state = DsirSelection.mergeState(state, delta)
+      .localCheckpoint(eager = true)
   }
 
   /** Per-bucket importance ratio table from the current state. */
@@ -65,43 +56,15 @@ final class SelectionMaintenance(spark: SparkSession) extends BatchLedger {
     DsirSelection.resample(DsirSelection.scoreDocs(
       DsirSelection.hashedBigramCounts(docs), ratioTable))
 
-  /** Persist the 256-row bucket state so a restarted job
-    * [[SelectionMaintenance.resume]]s without replaying the consumed
-    * stream prefix — bucket-count addition is associative/commutative,
-    * so the resumed fold is byte-identical to uninterrupted
-    * (spec-gated). Call between triggers.
-    */
-  def save(path: String): Unit = synchronized {
-    Snapshots.publish(spark, path) { dir =>
-      state.write.mode("overwrite").parquet(s"$dir/bucketCounts")
-      BatchLedger.save(spark, dir, lastAppliedBatch)
-    }
-  }
-
-  /** Wire a streaming document frame into this handle; `.start()` to
-    * run. The trigger's batchId rides the ledger, so a checkpoint-driven
-    * replay after restart is a no-op.
-    */
-  def attach(docs: DataFrame)
-      : org.apache.spark.sql.streaming.DataStreamWriter[Row] =
-    docs.writeStream.outputMode("append")
-      .foreachBatch { (b: DataFrame, id: Long) => merge(b, id) }
+  protected def pieces: Seq[(String, DataFrame)] = Seq("bucketCounts" -> state)
 }
 
 object SelectionMaintenance {
-
-  /** Reconstruct a [[SelectionMaintenance.save]]d handle in a fresh
-    * job — the model state loads from parquet; no streamed document is
-    * re-read.
-    */
-  def resume(spark: SparkSession, path: String): SelectionMaintenance = {
-    val dir = Snapshots.resolve(spark, path)
-    val h = new SelectionMaintenance(spark)
-    // eager localCheckpoint cuts lineage to the snapshot files, so a
-    // later save() to the SAME path is not an overwrite-what-you-read
-    h.state = Tables.parquet(spark, s"$dir/bucketCounts")
-      .localCheckpoint(eager = true)
-    h.restoreLedger(BatchLedger.load(spark, dir))
-    h
-  }
+  /** Resume a saved handle: no streamed document is re-read. */
+  def resume(spark: SparkSession, path: String): SelectionMaintenance =
+    Maintenance.resume(spark, path) { s =>
+      val h = new SelectionMaintenance(spark)
+      h.state = s("bucketCounts")
+      h
+    }
 }

@@ -6,7 +6,8 @@ import org.apache.spark.sql.SparkSession
 /** Atomic, versioned snapshot publication for the maintenance fleet's
   * `save()`/`resume()` pairs — the stage → publish → marker pattern
   * [[AnnIndexMaintenance]] uses for its layout, applied to driver-state
-  * snapshots.
+  * snapshots. [[Maintenance]] is the single owner of both calls: its
+  * `save` publishes and `Maintenance.resume` resolves, for every handle.
   *
   * Why: every handle's snapshot is SEVERAL parquet directories plus the
   * [[BatchLedger]] — written sequentially, a crash mid-save leaves state
@@ -37,9 +38,9 @@ import org.apache.spark.sql.SparkSession
   * before this publish still finds its directory (the single-driver
   * fleet never needs this, but the snapshot paths are advertised as
   * HDFS paths, where a sibling process resuming mid-publish is legal).
-  * A reader must load eagerly within one publish cycle — every fleet
-  * resume() localCheckpoints its loads immediately, which is what makes
-  * deleting the N−2 version safe.
+  * A reader must load eagerly within one publish cycle —
+  * `Maintenance.resume` localCheckpoints every piece immediately, which
+  * is what makes deleting the N−2 version safe.
   *
   * [[resolve]] returns the newest committed version dir, falling back
   * to the bare path only when it holds recognizable pre-versioning

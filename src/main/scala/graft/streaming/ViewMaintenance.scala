@@ -1,10 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.IncrementalAgg
 import graft.operators.IncrementalAgg.{AggSpec, JoinView}
-import graft.sources.Tables
 
 /** Streaming materialized-view maintenance — the standing-pipeline form
   * of the inc1/inc2/inc3 batch refreshes: a fact stream folds into a
@@ -37,7 +36,7 @@ import graft.sources.Tables
   */
 final class ViewMaintenance(spark: SparkSession, dim0: DataFrame,
     joinKeys: Seq[String], groupCols: Seq[String], aggs: Seq[AggSpec])
-    extends BatchLedger {
+    extends Maintenance(spark) {
 
   @volatile private var state: JoinView = null
 
@@ -47,12 +46,8 @@ final class ViewMaintenance(spark: SparkSession, dim0: DataFrame,
   /** The key-grain sub-aggregate (inspection / persistence). */
   def keyAgg: Option[DataFrame] = Option(state).map(_.keyAgg)
 
-  /** foreachBatch body — fold one trigger's facts into the view. A
-    * non-negative `batchId` rides the [[BatchLedger]]: a checkpoint-
-    * replayed trigger is a no-op; −1 folds unconditionally.
-    */
-  def merge(facts: DataFrame, batchId: Long = -1L): Unit = synchronized {
-    if (alreadyApplied(batchId)) return
+  /** Fold one trigger's facts into the view. */
+  protected def fold(facts: DataFrame): Unit = {
     // the first trigger folds into an empty base over the pinned dim
     val base = Option(state).getOrElse(IncrementalAgg.buildJoinView(
       facts.limit(0), dim0, joinKeys, groupCols, aggs)
@@ -63,7 +58,6 @@ final class ViewMaintenance(spark: SparkSession, dim0: DataFrame,
       aggs)
     state = jv.copy(keyAgg = jv.keyAgg.localCheckpoint(eager = true),
       view = jv.view.localCheckpoint(eager = true))
-    recordApplied(batchId)
   }
 
   /** Apply a dimension changelog (dim columns + `op`, at most one row
@@ -79,49 +73,18 @@ final class ViewMaintenance(spark: SparkSession, dim0: DataFrame,
       view = jv.view.localCheckpoint(eager = true))
   }
 
-  /** Persist the full maintenance state — the JoinView triple — so a
-    * restarted job [[ViewMaintenance.resume]]s mid-stream with no
-    * stored-fact rescan and no stream replay. Call between triggers.
-    */
-  def save(path: String): Unit = synchronized {
-    require(state != null, "fold at least one trigger before saving")
-    Snapshots.publish(spark, path) { dir =>
-      state.keyAgg.write.mode("overwrite").parquet(s"$dir/keyAgg")
-      state.dim.write.mode("overwrite").parquet(s"$dir/dim")
-      state.view.write.mode("overwrite").parquet(s"$dir/view")
-      BatchLedger.save(spark, dir, lastAppliedBatch)
-    }
-  }
-
-  /** Wire a streaming fact frame into this handle; `.start()` to run.
-    * The trigger's batchId rides the ledger, so a checkpoint-driven
-    * replay after restart is a no-op.
-    */
-  def attach(facts: DataFrame)
-      : org.apache.spark.sql.streaming.DataStreamWriter[Row] =
-    facts.writeStream.outputMode("append")
-      .foreachBatch { (b: DataFrame, id: Long) => merge(b, id) }
+  protected def pieces: Seq[(String, DataFrame)] = Option(state).toSeq
+    .flatMap(s => Seq("keyAgg" -> s.keyAgg, "dim" -> s.dim, "view" -> s.view))
 }
 
 object ViewMaintenance {
-
-  /** Reconstruct a [[ViewMaintenance.save]]d handle in a fresh job: the
-    * key-grain sub-aggregate, the dimension as of the kill, and the
-    * published view all load from parquet — stored facts are never
-    * rescanned and the consumed stream prefix is never replayed.
-    */
+  /** Resume a saved handle: no fact rescan, no stream replay. */
   def resume(spark: SparkSession, path: String, joinKeys: Seq[String],
-      groupCols: Seq[String], aggs: Seq[AggSpec]): ViewMaintenance = {
-    val dir = Snapshots.resolve(spark, path)
-    // eager localCheckpoints cut lineage to the snapshot files, so a
-    // later save() to the SAME path is not an overwrite-what-you-read
-    val dim = Tables.parquet(spark, s"$dir/dim").localCheckpoint(eager = true)
-    val h = new ViewMaintenance(spark, dim, joinKeys, groupCols, aggs)
-    h.state = JoinView(
-      Tables.parquet(spark, s"$dir/keyAgg").localCheckpoint(eager = true),
-      dim,
-      Tables.parquet(spark, s"$dir/view").localCheckpoint(eager = true))
-    h.restoreLedger(BatchLedger.load(spark, dir))
-    h
-  }
+      groupCols: Seq[String], aggs: Seq[AggSpec]): ViewMaintenance =
+    Maintenance.resume(spark, path) { s =>
+      val dim = s("dim")
+      val h = new ViewMaintenance(spark, dim, joinKeys, groupCols, aggs)
+      h.state = JoinView(s("keyAgg"), dim, s("view"))
+      h
+    }
 }

@@ -18,18 +18,26 @@ single command so there is no excuse to skip it.
 3. parquet reads — `read.parquet(` appears in src/main only inside
    `graft.sources.Tables.parquet`; any other call brings back Spark's
    one-task schema-inference job on every table resolution
-4. with query names: run graft.Verify on exactly those rows @ sf0.01 and
+4. streaming skeleton — `Snapshots.publish(`, `BatchLedger.save(`,
+   `BatchLedger.load(`, `restoreLedger(` and `.foreachBatch` appear in
+   graft.streaming only inside the `Maintenance` base (plus the files
+   that define them or keep their own protocol); a handle that regrows
+   its own save/resume/attach fails here
+5. with query names: run graft.Verify on exactly those rows @ sf0.01 and
    tools/check.py on the dump (the driver-gate stand-in for the rows you
    just touched)
-5. staleness report — README's counts-block HEAD vs the current HEAD, so
-   a post-snapshot commit visibly admits its artifacts are stale
+6. staleness report — README's counts-block source tree vs the current
+   one (`source_tree`), so a commit that changes the measured sources
+   after the snapshot visibly admits its artifacts are stale
 
 Exit code is non-zero on any red step; the staleness report is a warning
 only (the next snapshot commit clears it).
 """
+import os
 import re
 import subprocess
 import sys
+import tempfile
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -86,16 +94,61 @@ def check_parquet_reads():
     print("[precommit] parquet reads ok", flush=True)
 
 
+SKELETON_CALL = re.compile(r"Snapshots\.publish\(|BatchLedger\.save\(|"
+                           r"BatchLedger\.load\(|restoreLedger\(|\.foreachBatch\b")
+SKELETON_DIR = "src/main/scala/graft/streaming"
+# the base itself; the files defining the publish protocol and the
+# ledger; EventStreams' idempotent file sink, which is no handle
+SKELETON_ALLOWED = {"Maintenance.scala", "Snapshots.scala",
+                    "BatchLedger.scala", "EventStreams.scala"}
+
+
+def check_streaming_skeleton():
+    """The maintenance handles' merge guard, save, resume and attach
+    live once, in graft.streaming.Maintenance; each handle writes only
+    its fold and its named state frames."""
+    hits = []
+    for f in sorted((REPO / SKELETON_DIR).glob("*.scala")):
+        if f.name in SKELETON_ALLOWED:
+            continue
+        text = f.read_text()
+        hits += [f"{f.relative_to(REPO).as_posix()}:"
+                 f"{text.count(chr(10), 0, m.start()) + 1} {m.group(0)}"
+                 for m in SKELETON_CALL.finditer(text)]
+    if hits:
+        raise SystemExit("[precommit] RED — maintenance skeleton calls "
+                         f"outside graft.streaming.Maintenance: {hits}")
+    print("[precommit] streaming skeleton ok", flush=True)
+
+
+# what README's counts are measured on: a change here changes them
+SOURCES = ["src", "build.sbt", "project", "tools/check.py"]
+
+
+def source_tree():
+    """Short git tree id of SOURCES as they stand in the working tree
+    (untracked files included, ignored ones not). Unlike the commit id
+    it survives a commit of exactly these sources, and doc-only commits."""
+    with tempfile.TemporaryDirectory() as d:
+        env = dict(os.environ, GIT_INDEX_FILE=os.path.join(d, "index"))
+        subprocess.run(["git", "add", "-A", "--", *SOURCES], cwd=REPO,
+                       env=env, check=True)
+        return subprocess.run(["git", "write-tree"], cwd=REPO, env=env,
+                              capture_output=True, text=True,
+                              check=True).stdout.strip()[:10]
+
+
 def staleness_report():
-    head = subprocess.run(["git", "rev-parse", "--short", "HEAD"], cwd=REPO,
-                          capture_output=True, text=True).stdout.strip()
-    m = re.search(r"\*\*Status at `(\w+)`\*\*", (REPO / "README.md").read_text())
-    if m and not head.startswith(m.group(1)) and not m.group(1).startswith(head):
-        print(f"[precommit] WARNING: README counts pinned at {m.group(1)} "
-              f"but HEAD is {head} — artifacts are STALE; run "
-              "tools/round_snapshot.py before the round ends", flush=True)
+    tree = source_tree()
+    m = re.search(r"source tree `(\w+)`", (REPO / "README.md").read_text())
+    if not m or m.group(1) != tree:
+        print(f"[precommit] WARNING: README counts pinned at source tree "
+              f"{m.group(1) if m else '(none)'} but the sources are {tree} "
+              "— artifacts are STALE; run tools/round_snapshot.py before "
+              "the round ends", flush=True)
     else:
-        print(f"[precommit] README counts HEAD matches ({head})", flush=True)
+        print(f"[precommit] README counts source tree matches ({tree})",
+              flush=True)
 
 
 def main():
@@ -103,6 +156,7 @@ def main():
     run("sbt compile", ["sbt", "-batch", "compile", "Test/compile"])
     check_registry_reachability()
     check_parquet_reads()
+    check_streaming_skeleton()
     if names:
         subprocess.run(["rm", "-rf", OUT], check=True)
         run(f"verify {len(names)} touched rows @ sf0.01",

@@ -27,6 +27,8 @@ import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO / "tools"))
+from precommit import SOURCES, source_tree  # noqa: E402
 VERIFY_OUT = "/tmp/graft-verify-snapshot"
 SF = "/root/testdata/sf0.01"
 
@@ -53,6 +55,7 @@ def render_readme_counts(n_specs, n_green, n_total):
     current are the ones this snapshot just measured."""
     head = subprocess.run(["git", "rev-parse", "--short", "HEAD"], cwd=REPO,
                           capture_output=True, text=True).stdout.strip()
+    tree = source_tree()
     begin, end = "<!-- counts:begin -->", "<!-- counts:end -->"
     tail = (
         "(every registry row is oracle-gated — the pruned-ANN rows replay "
@@ -63,14 +66,16 @@ def render_readme_counts(n_specs, n_green, n_total):
         f"recall-gated in spec and audited at 10x — RECALL_AUDIT_10x.json).")
     block = "\n".join([
         begin,
-        f"**Status at `{head}`** (auto-rendered by `tools/round_snapshot.py` "
-        f"from the run's own outputs, {time.strftime('%Y-%m-%d')}): "
+        f"**Status at `{head}`, source tree `{tree}`** (auto-rendered by "
+        f"`tools/round_snapshot.py` from the run's own outputs, "
+        f"{time.strftime('%Y-%m-%d')}): "
         f"`sbt test` **{n_specs}/{n_specs}**; registry **{n_total}** queries, "
         f"**{n_green}** oracle-green vs DuckDB at sf0.01 " + tail,
-        f"*These counts are valid ONLY at `{head}` — if "
-        f"`git rev-parse --short HEAD` prints anything else, every artifact "
-        f"(ORACLE_SQL, audits, BENCHSCALE) is stale; `tools/precommit.py` "
-        f"warns on this, `tools/round_snapshot.py` clears it.*",
+        f"*These counts are valid ONLY for source tree `{tree}` (the git "
+        f"tree of {', '.join(SOURCES)}) — once those sources change, every "
+        f"artifact (ORACLE_SQL, audits, BENCHSCALE) is stale; "
+        f"`tools/precommit.py` warns on this, `tools/round_snapshot.py` "
+        f"clears it.*",
         end])
     p = REPO / "README.md"
     text = p.read_text()
